@@ -1,4 +1,5 @@
-"""Generation-scoped release of persisted DataFrame handles.
+"""Generation-scoped release of persisted DataFrame handles, and the
+source-stamped artifact memo built on it.
 
 Several exact total-order operators (``relational.global_order_index``
 consumers: the exact-NTILE RFM path, customer Pareto, global rank)
@@ -29,16 +30,26 @@ a sampled partitioning) is ``localCheckpoint``-ed with its lineage
 CUT, so a stale read either serves the checkpointed blocks or fails
 loudly — it can never silently recompute under stale offsets.
 
-``release()`` lets a long-lived endpoint drop everything explicitly
-(e.g. on session close).
+``memo()`` builds on the same registry: one memoized artifact per tag,
+fresh while the Spark application and every source file's
+(path, mtime_ns, size) stamp are unchanged. ``source_stamp()`` is the
+one place that stamp is computed; the entry module's persisted index
+tables record it in a sidecar after each build.
 """
 
 from __future__ import annotations
 
+import os
 import threading
+from collections.abc import Callable, Iterable
+from typing import TypeVar
+
+T = TypeVar("T")
 
 _lock = threading.Lock()
 _generations: dict[str, list] = {}
+_memos: dict[str, tuple[tuple, object]] = {}
+_tag_locks: dict[str, threading.Lock] = {}
 
 
 def rotate(tag: str, handles) -> None:
@@ -72,25 +83,38 @@ def rotate(tag: str, handles) -> None:
         gc.collect()
 
 
-def release(tag: str | None = None) -> None:
-    """Unpersist the current generation for ``tag`` (all tags when
-    ``None``).  For endpoint shutdown / test teardown."""
-    with _lock:
-        if tag is None:
-            drop = [h for hs in _generations.values() for h in hs]
-            _generations.clear()
-        else:
-            drop = _generations.pop(tag, [])
-    for h in drop:
-        try:
-            h.unpersist(blocking=False)
-        except Exception:
-            pass
+def source_stamp(sources: Iterable[str]) -> tuple:
+    """``(abspath, mtime_ns, size)`` per source file. Nanosecond mtime
+    plus size: whole-second mtimes would serve stale data after a
+    same-second in-place rewrite."""
+    stamp = []
+    for path in sources:
+        st = os.stat(path)
+        stamp.append((os.path.abspath(path), st.st_mtime_ns, st.st_size))
+    return tuple(stamp)
 
 
-def cached_count(tag: str | None = None) -> int:
-    """Number of live registered handles (for tests)."""
+def memo(spark, tag: str, sources: Iterable[str], build: Callable[[], T]) -> T:
+    """The artifact ``build()`` made for ``tag`` in this Spark
+    application from sources with the same :func:`source_stamp`;
+    otherwise call ``build()`` and keep its result as the tag's one
+    generation. A DataFrame result is registered with :func:`rotate`,
+    so the replaced generation is unpersisted.
+
+    Each tag has its own lock: concurrent callers of one tag build
+    once, while different tags build in parallel."""
+    from pyspark.sql import DataFrame
+
+    key = (spark.sparkContext.applicationId, source_stamp(sources))
     with _lock:
-        if tag is None:
-            return sum(len(v) for v in _generations.values())
-        return len(_generations.get(tag, []))
+        tag_lock = _tag_locks.setdefault(tag, threading.Lock())
+    with tag_lock:
+        hit = _memos.get(tag)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        hit = None  # let rotate's gc.collect reclaim the stale generation
+        value = build()
+        _memos[tag] = (key, value)
+        if isinstance(value, DataFrame):
+            rotate(tag, [value])
+        return value

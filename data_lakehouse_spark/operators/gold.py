@@ -213,7 +213,7 @@ def product_performance(
     return df.orderBy(F.desc("total_revenue"), "product_id")
 
 
-def category_performance(silver: DataFrame, *, scan_once: bool = False) -> DataFrame:
+def category_performance(silver: DataFrame) -> DataFrame:
     """gold_category_performance: daily category rollup + top brand.
 
     W2 (ROW_NUMBER top-1-per-group, brand tiebreak added) feeding J1
@@ -239,94 +239,39 @@ def category_performance(silver: DataFrame, *, scan_once: bool = False) -> DataF
     purchase = _is("purchase")
     keys = ["analysis_date", "category_level_1", "category_level_2"]
 
-    if scan_once:
-        # ONE scan: pre-aggregate at (date, c1, c2, brand, user) with
-        # purchase conditions per-cell, then derive both CTE shapes by
-        # re-aggregation (decimal sums and conditional counts compose
-        # associatively — bit-identical results, oracle-verified). Wins
-        # when events per (date, cat, brand, user) cell ≫ 1 so the
-        # pre-agg shrinks the shuffle below the cost of a second scan;
-        # loses when the user key is near-unique (measured 2× slower on
-        # the TPC-H instantiation, where user = order key) — hence
-        # opt-in.
-        pre = (
-            silver.filter(F.col("category_level_1").isNotNull())
-            .groupBy(
-                F.col("event_date").alias("analysis_date"),
-                "category_level_1",
-                "category_level_2",
-                "brand",
-                "user_id",
-            )
-            .agg(
-                F.sum(
-                    F.when(purchase, F.coalesce(F.col("price").cast(_DEC), _zero()))
-                    .otherwise(_zero())
-                ).alias("_m"),
-                F.count(F.when(purchase, F.lit(1))).alias("_n"),
-                F.sum(F.when(purchase, F.col("price").cast(_DEC))).alias("_bm"),
-            )
+    category_daily = (
+        silver.filter(F.col("category_level_1").isNotNull())
+        .groupBy(
+            F.col("event_date").alias("analysis_date"),
+            "category_level_1",
+            "category_level_2",
         )
-        category_daily = (
-            pre.groupBy(*keys)
-            .agg(
-                F.sum("_m").cast("double").alias("total_revenue"),
-                F.sum("_n").cast("bigint").alias("total_orders"),
-                F.countDistinct(
-                    F.when(F.col("_n") > 0, F.col("user_id"))
-                ).cast("bigint").alias("unique_customers"),
-            )
-            .withColumn(
-                "avg_order_value",
-                _ratio(F.col("total_revenue"), F.col("total_orders")),
-            )
+        .agg(
+            _money(purchase).alias("total_revenue"),
+            _cnt(purchase).alias("total_orders"),
+            _cntd(purchase, "user_id").alias("unique_customers"),
         )
-        # brand groups exist only where ≥1 purchase row had this brand —
-        # same membership as the reference's filtered CTE
-        brand_daily = (
-            pre.filter(F.col("brand").isNotNull())
-            .groupBy(*keys, "brand")
-            .agg(
-                F.sum("_bm").cast("double").alias("brand_revenue"),
-                F.sum("_n").alias("_np"),
-            )
-            .filter(F.col("_np") > 0)
-            .drop("_np")
+        .withColumn(
+            "avg_order_value",
+            _ratio(F.col("total_revenue"), F.col("total_orders")),
         )
-    else:
-        category_daily = (
-            silver.filter(F.col("category_level_1").isNotNull())
-            .groupBy(
-                F.col("event_date").alias("analysis_date"),
-                "category_level_1",
-                "category_level_2",
-            )
-            .agg(
-                _money(purchase).alias("total_revenue"),
-                _cnt(purchase).alias("total_orders"),
-                _cntd(purchase, "user_id").alias("unique_customers"),
-            )
-            .withColumn(
-                "avg_order_value",
-                _ratio(F.col("total_revenue"), F.col("total_orders")),
-            )
+    )
+    brand_daily = (
+        silver.filter(
+            purchase
+            & F.col("brand").isNotNull()
+            & F.col("category_level_1").isNotNull()
         )
-        brand_daily = (
-            silver.filter(
-                purchase
-                & F.col("brand").isNotNull()
-                & F.col("category_level_1").isNotNull()
-            )
-            .groupBy(
-                F.col("event_date").alias("analysis_date"),
-                "category_level_1",
-                "category_level_2",
-                "brand",
-            )
-            .agg(
-                F.sum(F.col("price").cast(_DEC)).cast("double").alias("brand_revenue")
-            )
+        .groupBy(
+            F.col("event_date").alias("analysis_date"),
+            "category_level_1",
+            "category_level_2",
+            "brand",
         )
+        .agg(
+            F.sum(F.col("price").cast(_DEC)).cast("double").alias("brand_revenue")
+        )
+    )
     w = Window.partitionBy(*keys).orderBy(F.desc("brand_revenue"), F.asc("brand"))
     top_brand = (
         brand_daily.withColumn("brand_rank", F.row_number().over(w))

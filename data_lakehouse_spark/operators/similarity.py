@@ -36,7 +36,6 @@ from data_lakehouse_spark.functions.vectors import cosine_similarity
 __all__ = [
     "cosine_topk",
     "cosine_pairs",
-    "cosine_pairs_above",
     "cosine_pairs_blocked",
     "lsh_cosine_candidates",
     "random_hyperplane_signature",
@@ -104,8 +103,7 @@ def cosine_pairs(
     ``ann_*`` top-k tiers, or :func:`semdedup_prune`. Pass
     ``max_exact_rows=None`` (or a higher bound) for a DELIBERATE exact
     run — the refusal exists so the quadratic can't be reached by
-    accident at scale, same pattern as the ``cosine_pairs_above``
-    facade deprecation."""
+    accident at scale."""
     n = df.count()
     _guard_exact_pairs("cosine_pairs", n, max_exact_rows)
     if n <= max_broadcast_rows:
@@ -133,41 +131,6 @@ def _guard_exact_pairs(caller: str, n: int, max_exact_rows: int | None) -> None:
             "similarity.semdedup_prune — or pass max_exact_rows=None "
             "for a deliberate exact run."
         )
-
-
-def cosine_pairs_above(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.5,
-    max_broadcast_rows: int = 1_000_000,
-) -> DataFrame:
-    """DEPRECATED collect-and-broadcast exact pair join — use
-    :func:`cosine_pairs` (auto strategy) or
-    :func:`cosine_pairs_blocked` (always distributed). This was the one
-    anti-pattern-shaped API in the package (a documented "must fit in
-    driver" contract); it now guards the same fast-path kernel the
-    facade uses, and still fails fast over ``max_broadcast_rows``
-    rather than OOMing."""
-    import warnings
-
-    warnings.warn(
-        "cosine_pairs_above is deprecated: use cosine_pairs "
-        "(auto broadcast/blocked) or cosine_pairs_blocked",
-        DeprecationWarning,
-        stacklevel=2,
-    )
-    n = df.count()
-    if n > max_broadcast_rows:
-        raise ValueError(
-            f"cosine_pairs_above: {n} rows exceeds max_broadcast_rows="
-            f"{max_broadcast_rows}; use cosine_pairs_blocked (exact) or "
-            "lsh_cosine_candidates (approximate) instead"
-        )
-    return _pairs_broadcast(
-        df, vec_col=vec_col, id_col=id_col, threshold=threshold
-    )
 
 
 def _pairs_broadcast(
@@ -341,7 +304,7 @@ def cosine_pairs_blocked(
     to the ``num_blocks`` unordered block pairs it participates in, so
     every pair of rows meets in EXACTLY one ``applyInPandas`` group
     where one float64 GEMM scores the block-vs-block slab. Identical
-    per-pair arithmetic to :func:`cosine_pairs_above` (same numpy dot /
+    per-pair arithmetic to :func:`_pairs_broadcast` (same numpy dot /
     norm product), so results are interchangeable — but per-task memory
     is bounded by ~2·n/num_blocks vectors and nothing touches the
     driver. Shuffle volume is n·num_blocks rows; pick
@@ -868,7 +831,6 @@ def build_embedding_index(
     num_planes: int = 6,
     seed: int = 7,
     mode: str = "replace",
-    extra_properties: dict | None = None,
 ):
     """Materialize the ANN index table: (id, vector, ivf_bucket),
     written through the catalog PARTITIONED BY ivf_bucket — one
@@ -899,7 +861,6 @@ def build_embedding_index(
             "index.num_planes": str(num_planes),
             "index.seed": str(seed),
             "index.dim": str(dim),
-            **(extra_properties or {}),
         },
         mode=mode,
     )
@@ -956,7 +917,6 @@ def build_kmeans_ivf_index(
     seed: int = 7,
     max_iter: int = 20,
     mode: str = "replace",
-    extra_properties: dict | None = None,
 ):
     """Materialize a LEARNED IVF index: Spark ML KMeans centroids as the
     coarse quantizer (IVF-Flat), rows written through the catalog
@@ -1004,7 +964,6 @@ def build_kmeans_ivf_index(
             "index.k": str(k),
             "index.dim": str(len(centroids[0])),
             "index.centroids": json.dumps(centroids),
-            **(extra_properties or {}),
         },
         mode=mode,
     )
@@ -1069,7 +1028,6 @@ def build_ivf_pq_index(
     seed: int = 7,
     max_iter: int = 20,
     sample_size: int = 65_536,
-    extra_properties: dict | None = None,
     mode: str = "replace",
     source_table: str | None = None,
 ):
@@ -1323,8 +1281,7 @@ def build_ivf_pq_index(
                     if source_table
                     else {}
                 ),
-                **(extra_properties or {}),
-            },
+                },
         )
     finally:
         indexed.unpersist(blocking=False)

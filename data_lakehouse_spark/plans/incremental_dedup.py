@@ -103,7 +103,6 @@ class IncrementalNearDupIndex:
         *,
         text_col: str = "text",
         id_col: str = "doc_id",
-        extra_properties: dict | None = None,
     ):
         """Full (re)build: sign every document, write partitioned by
         band. One corpus scan — the amortized write-time cost every
@@ -112,7 +111,7 @@ class IncrementalNearDupIndex:
             self.name,
             self._sign(docs, text_col, id_col),
             partition_by=["band"],
-            properties={**self._props(), **(extra_properties or {})},
+            properties=self._props(),
             mode="replace",
         )
 

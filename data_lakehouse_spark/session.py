@@ -53,13 +53,9 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # entries). Any long-lived session running a varied workload — a
     # serving endpoint, a dashboard backend, this engine's 150+-query
     # suite — generates several classes per query and THRASHES a
-    # 100-entry cache, recompiling every stage on every re-run
-    # (measured: ~21% of total suite wall, see OPTIMIZATION_r12.md
-    # "Tail"). 2000 entries holds the whole working set for tens of MB
-    # of metaspace; env-overridable for small-memory deployments.
-    "spark.sql.codegen.cache.maxEntries": os.environ.get(
-        "SPARK_GRAFT_CODEGEN_CACHE", "2000"
-    ),
+    # 100-entry cache, recompiling every stage on every re-run. 2000
+    # entries holds the whole working set for tens of MB of metaspace.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 

@@ -238,7 +238,7 @@ def test_blocked_cosine_pairs_match_broadcast(spark, sf_dir):
     from data_lakehouse_spark.operators import similarity
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = similarity.cosine_pairs_above(emb, threshold=0.35)
+    a = similarity.cosine_pairs(emb, threshold=0.35)
     b = similarity.cosine_pairs_blocked(emb, threshold=0.35, num_blocks=5)
     pa = {(r.id_a, r.id_b, round(r.cosine_sim, 9)) for r in a.collect()}
     pb = {(r.id_a, r.id_b, round(r.cosine_sim, 9)) for r in b.collect()}
@@ -596,7 +596,7 @@ def test_events_point_lookup_bloom_prunes_to_one_dir(spark, sf_dir):
     help: every dir spans the id domain)."""
     from pyspark.sql import functions as F
 
-    cat = entry._events_bloom_catalog(spark, sf_dir)
+    cat = entry.INDEXES["events_bloom"](spark, sf_dir)
     df = cat.read("events_bloom", prune_eq={"event_id": 424}).filter(
         F.col("event_id") == 424
     )

@@ -194,6 +194,7 @@ def test_entry_multimodal_shared_generation_memoizes(spark):
 
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as em
+    from data_lakehouse_spark import cacheutil
 
     sf_dir = "/root/testdata/sf0.001"
     a = em.queries()["multimodal_features"](spark, sf_dir)
@@ -201,13 +202,16 @@ def test_entry_multimodal_shared_generation_memoizes(spark):
     ra = [(r["doc_id"], round(r["cosine_sim"], 9)) for r in a.collect()]
     rb = [(r["doc_id"], round(r["cosine_sim"], 9)) for r in b.collect()]
     assert ra == rb and len(ra) > 0
-    # the memo handed both calls the SAME persisted feature frame
-    key_tags = {k[0] for k in em._MM_MEMO}
-    assert "entry.multimodal_features" in key_tags
-    frames1 = em._mm_shared(
-        spark, sf_dir, "entry.multimodal_features", lambda: None
+    # the memo hands later calls the SAME persisted feature frame:
+    # build() never re-runs (this one would throw)
+    def build():
+        raise AssertionError("memoized generation was rebuilt")
+
+    frames1 = cacheutil.memo(
+        spark,
+        "entry.multimodal_features",
+        [f"{sf_dir}/documents.parquet"],
+        build,
     )
-    frames2 = em._mm_shared(
-        spark, sf_dir, "entry.multimodal_features", lambda: None
-    )
-    assert frames1 is frames2  # build() never re-ran (lambda: None would throw)
+    frames2 = em._mm_shared(spark, sf_dir, "entry.multimodal_features", build)
+    assert frames1 is frames2

@@ -20,6 +20,7 @@ import time
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod  # noqa: E402
+import bench  # noqa: E402
 from data_lakehouse_spark.session import get_spark  # noqa: E402
 
 
@@ -54,22 +55,7 @@ def main() -> None:
     spark = get_spark("qbench")
     for k, v in confs:
         spark.conf.set(k, v)
-    # same warmup as bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite").save()
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode("overwrite").save()
-    queries["silver_events"](spark, sf_dir).limit(1).count()
-    need_idx = {"ann_ivf_topk", "ann_kmeans_topk", "ann_ivf_pq_topk",
-                "ann_ivf_pq_incremental", "near_dup_incremental",
-                "events_bloom_prefilter"}
-    if need_idx & set(names):
-        entrymod._ann_index_catalog(spark, sf_dir)
-        entrymod._kmeans_index_catalog(spark, sf_dir)
-        entrymod._pq_index_catalog(spark, sf_dir)
-        entrymod._pq_incr_index_catalog(spark, sf_dir)
-        entrymod._neardup_index(spark, sf_dir)
-        entrymod._events_bloom_catalog(spark, sf_dir)
+    bench.warm_up(spark, queries, sf_dir)
 
     results = {}
     for name in names:
