@@ -29,9 +29,11 @@ the call sites don't change.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import re
+import threading
 import time
 from dataclasses import dataclass
 
@@ -52,6 +54,11 @@ __all__ = ["Catalog", "TableHandle", "apply_partition_transforms"]
 _TRANSFORM_RE = re.compile(
     r"^(days|hours|months)\((\w+)\)$|^(bucket|truncate)\((\d+),\s*(\w+)\)$"
 )
+
+
+#: the layout of positional-delete files: (data file path, row index)
+#: pairs, as ``Catalog._mor_delete`` writes them
+_POS_SCHEMA = "_file string, _pos bigint"
 
 
 def _fsync_dir(path: str) -> None:
@@ -128,10 +135,11 @@ class Catalog:
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
-        # committed delete dirs are immutable → their byte totals are
-        # cacheable; keeps the per-read broadcast-hint sizing off the
-        # filesystem after first touch
-        self._dir_bytes_cache: dict[str, int] = {}
+        # committed snapshot dirs never change, so what a read resolves
+        # from one (scan frame, byte total) is reusable while the dir's
+        # stamp holds — see _dir_cached. Keyed per reading table's path.
+        self._scan_cache: dict[str, dict[tuple, object]] = {}
+        self._scan_lock = threading.Lock()
 
     # -- manifest helpers --------------------------------------------------
     def _handle(self, name: str) -> TableHandle:
@@ -211,6 +219,8 @@ class Catalog:
             )
         os.remove(h.manifest_path)
         shutil.rmtree(h.path, ignore_errors=True)
+        with self._scan_lock:
+            self._scan_cache.pop(os.path.normpath(h.path), None)
         with contextlib.suppress(Exception):
             self.spark.catalog.dropTempView(name)
         return {"op": "drop_table", "name": name, "dependents": dependents}
@@ -1271,17 +1281,6 @@ class Catalog:
         head = self._main_head(entries, name)
         pb = head.get("partition_by")
 
-        def _dir_bytes(dirs: list[str]) -> int:
-            return sum(
-                os.path.getsize(os.path.join(dp, f))
-                for d in dirs
-                for dp, _, fs in os.walk(
-                    os.path.normpath(os.path.join(h.path, d))
-                )
-                for f in fs
-                if f.endswith(".parquet")
-            )
-
         def _shape(df: DataFrame, n_files: int) -> DataFrame:
             if zorder_by:
                 # OPTIMIZE ZORDER BY: range-partition on the Morton
@@ -1300,7 +1299,7 @@ class Catalog:
         if where is None:
             current = self.read(name)
             files_before = len(current.inputFiles())
-            bytes_total = _dir_bytes(head["data_dirs"])
+            bytes_total = sum(self._dir_bytes(h, d) for d in head["data_dirs"])
             n_files = max(1, -(-bytes_total // target_file_bytes))
             self._commit(
                 h, _shape(current, n_files), op="compact", replace=True
@@ -1314,8 +1313,6 @@ class Catalog:
                 "rewritten_dirs": list(head["data_dirs"]),
                 "kept_dirs": [],
             }
-
-        import functools
 
         cond = F.expr(where) if isinstance(where, str) else where
         is_hit = F.coalesce(cond, F.lit(False))
@@ -1352,7 +1349,7 @@ class Catalog:
             ],
         )
         files_before = len(hit_files)
-        bytes_touched = _dir_bytes(touched)
+        bytes_touched = sum(self._dir_bytes(h, d) for d in touched)
         n_files = max(1, -(-bytes_touched // target_file_bytes))
         rewritten = _shape(
             cur.filter(in_touched).drop("_cow_file"), n_files
@@ -1403,8 +1400,6 @@ class Catalog:
         scoped to one day rewrites one day, not the table). Time travel
         to the pre-DML version keeps working; readers flip atomically
         with the manifest."""
-        import functools
-
         h = self._handle(name)
         entries = self._load_manifest(h)
         if not entries:
@@ -1921,8 +1916,6 @@ class Catalog:
         two source rows is the Delta ``MERGE`` cardinality violation —
         nondeterministic which update wins).
         """
-        import functools
-
         h = self._handle(name)
         entries = self._load_manifest(h)
         if not entries:
@@ -2875,6 +2868,7 @@ class Catalog:
             df = self._apply_eq_deletes(h, entries, entry, df, dirs, eq_recs)
         if lineage and not with_lineage:
             df = df.drop("_file", "_pos")
+        self._evict_outside(h, entry)
         return df
 
     def _apply_eq_deletes(
@@ -2919,20 +2913,77 @@ class Catalog:
 
     def _dir_bytes(self, h: TableHandle, d: str) -> int:
         """On-disk bytes of one table dir (metadata-only walk), cached
-        per absolute path — the read-path broadcast-hint sizing calls
-        this per delete dir per read, and committed delete dirs never
-        change."""
-        key = os.path.normpath(os.path.join(h.path, d))
-        hit = self._dir_bytes_cache.get(key)
+        per dir stamp — committed dirs never change, and the read path
+        sizes its broadcast hints from every delete dir on every read
+        (compaction sizes its output from the data dirs)."""
+        path = os.path.normpath(os.path.join(h.path, d))
+
+        def walk() -> int:
+            return sum(
+                os.path.getsize(os.path.join(dp, f))
+                for dp, _, fs in os.walk(path)
+                for f in fs
+                if f.endswith(".parquet")
+            )
+
+        return self._dir_cached(h, d, ("bytes",), walk)
+
+    def _dir_cached(self, h: TableHandle, d: str, variant: tuple, build):
+        """``build()`` for snapshot dir ``d`` of table ``h``, resolved
+        once per dir stamp and ``variant``.
+
+        A committed dir is immutable, so a scan frame or byte total
+        built from it stays valid while the dir is the same directory:
+        the key is ``(normpath, st_ino, st_mtime_ns, variant)``. A table
+        dropped and recreated under the same name — by this catalog or
+        by another process — writes new dirs with new stamps and is
+        never served the old frames; a missing dir builds uncached, so
+        the reader raises exactly as it would without the cache. Two
+        threads missing the same key both build (the lock only guards
+        the dict), which costs a duplicate frame, never a wrong one."""
+        path = os.path.normpath(os.path.join(h.path, d))
+        try:
+            st = os.stat(path)
+        except OSError:
+            return build()
+        key = (path, st.st_ino, st.st_mtime_ns, variant)
+        table = os.path.normpath(h.path)
+        with self._scan_lock:
+            hit = self._scan_cache.get(table, {}).get(key)
         if hit is not None:
             return hit
-        total = 0
-        for dp, _, fs in os.walk(key):
-            for f in fs:
-                if f.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(dp, f))
-        self._dir_bytes_cache[key] = total
-        return total
+        value = build()
+        with self._scan_lock:
+            cached = self._scan_cache.setdefault(table, {})
+            # the same path under an older stamp is a dir that was
+            # replaced (table recreated elsewhere): its frames are dead
+            for k in [k for k in cached if k[0] == path and k[1:3] != key[1:3]]:
+                del cached[k]
+            cached[key] = value
+        return value
+
+    def _evict_outside(self, h: TableHandle, entry: dict) -> None:
+        """Bound the scan cache after a read resolved snapshot ``entry``:
+        drop the table's cached values for dirs outside the snapshot,
+        and data frames projected to a schema other than its own (left
+        behind by an ALTER)."""
+        keep = {
+            os.path.normpath(os.path.join(h.path, self._dd_name(d)))
+            for d in entry["data_dirs"] + list(entry.get("delete_dirs") or [])
+        }
+        schema = self._schema_key(entry)
+        with self._scan_lock:
+            cached = self._scan_cache.get(os.path.normpath(h.path), {})
+            for k in [
+                k
+                for k in cached
+                if k[0] not in keep or (k[3][0] == "data" and k[3][1] != schema)
+            ]:
+                del cached[k]
+
+    @staticmethod
+    def _schema_key(entry: dict) -> str:
+        return json.dumps(entry["schema"], sort_keys=True)
 
     def _eq_scope(self, h: TableHandle, rec: dict):
         """Row-scope condition of one equality delete: for local
@@ -3006,10 +3057,15 @@ class Catalog:
             cur_by_id.get(fid, c) if fid is not None else c
             for c, fid in zip(old_cols, fids)
         ]
-        dels = self.spark.read.parquet(
-            os.path.join(h.path, rec["dir"])
-        ).select(
-            *[F.col(c).alias(f"_eqk_{i}") for i, c in enumerate(old_cols)]
+        dels = self._dir_cached(
+            h,
+            rec["dir"],
+            ("eq", tuple(old_cols)),
+            lambda: self.spark.read.parquet(
+                os.path.join(h.path, rec["dir"])
+            ).select(
+                *[F.col(c).alias(f"_eqk_{i}") for i, c in enumerate(old_cols)]
+            ),
         )
         cond = F.lit(True)
         for i, c in enumerate(now_cols):
@@ -3017,9 +3073,21 @@ class Catalog:
         return dels, cond
 
     def _read_positions(self, h: TableHandle, ddirs: list[str]) -> DataFrame:
-        """Union of positional-delete files: (_file, _pos) pairs."""
-        paths = [os.path.join(h.path, d) for d in ddirs]
-        return self.spark.read.parquet(*paths).select("_file", "_pos")
+        """Union of positional-delete files: (_file, _pos) pairs, read
+        with the fixed schema :meth:`_mor_delete` (their only writer)
+        gives them — no schema-inference job per dir."""
+        parts = [
+            self._dir_cached(
+                h,
+                d,
+                ("pos",),
+                lambda d=d: self.spark.read.schema(_POS_SCHEMA).parquet(
+                    os.path.join(h.path, d)
+                ),
+            )
+            for d in ddirs
+        ]
+        return functools.reduce(lambda a, b: a.union(b), parts)
 
     def _project_dirs(
         self,
@@ -3066,8 +3134,8 @@ class Catalog:
         out_names = [f.name for f in schema.fields] + (
             ["_file", "_pos"] if lineage else []
         )
-        parts = []
-        for d in dirs:
+
+        def project(d: str) -> DataFrame:
             p = os.path.join(h.path, d)
             wentry = self._writer_entry(entries, entry, d)
             writer_ids = _ids(wentry["schema"]["fields"]) if target_ids else None
@@ -3083,8 +3151,9 @@ class Catalog:
                 raw = self.spark.read.schema(schema).option("basePath", p).parquet(p)
                 if lineage:
                     raw = raw.select("*", *lin_cols)
-                parts.append(raw)
-                continue
+                # partition columns come back from directory names;
+                # enforce the declared column order
+                return raw.select(*out_names)
             wschema = StructType.fromJson(wentry["schema"])
             raw = (
                 self.spark.read.schema(wschema).option("basePath", p).parquet(p)
@@ -3111,7 +3180,15 @@ class Catalog:
                     )
             if lineage:
                 cols.extend(lin_cols)
-            parts.append(raw.select(*cols))
+            return raw.select(*cols)
+
+        # a dir's projection depends on the dir (its writer entry is
+        # fixed by it), the target schema and the lineage flag
+        variant = ("data", self._schema_key(entry), lineage)
+        parts = [
+            self._dir_cached(h, d, variant, lambda d=d: project(d))
+            for d in dirs
+        ]
         if not parts:  # every dir pruned away / no dirs requested
             empty = self.spark.createDataFrame([], schema)
             if lineage:
@@ -3121,12 +3198,12 @@ class Catalog:
                     F.lit(None).cast("bigint").alias("_pos"),
                 )
             return empty.select(*out_names)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        # partition columns come back from directory names; enforce the
-        # declared column order
-        return df.select(*out_names)
+        # every part already has the out_names columns in order, so a
+        # positional union is the by-name union; toDF re-aliases them,
+        # giving each read its own output attributes — two reads built
+        # from the same cached parts can still be joined by column
+        df = functools.reduce(lambda a, b: a.union(b), parts)
+        return df.toDF(*out_names)
 
     def table_changes(
         self, name: str, from_version: int, to_version: int | None = None
@@ -3430,8 +3507,6 @@ class Catalog:
             # This one case reads the (small, broadcast-sized by the
             # MOR contract) delete files' file column instead of being
             # purely footer-metadata.
-            import functools
-
             live = [self._dir_abs(h, d) for d in entry["data_dirs"]]
             pos = self._read_positions(h, pos_dirs)
             if live:

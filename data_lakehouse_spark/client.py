@@ -157,11 +157,15 @@ class Connection:
             # 4xx with an "error" body is the endpoint's SQL-analysis
             # contract (ProgrammingError below); anything else — 5xx
             # from a proxy, or an error body in an unexpected shape —
-            # is transport-level, never a silent empty result set
-            try:
-                out = json.loads(e.read())
-            except Exception:
-                out = None
+            # is transport-level, never a silent empty result set.
+            # The error response owns the socket: close it here even
+            # when reading the body fails, not whenever the raised
+            # error (which chains it) is collected
+            with e:
+                try:
+                    out = json.loads(e.read())
+                except Exception:
+                    out = None
             if (
                 e.code >= 500
                 or not isinstance(out, dict)

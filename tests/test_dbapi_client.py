@@ -304,3 +304,73 @@ def test_truncation_warns_by_default(endpoint):
 
     with pytest.raises(dbapi.InterfaceError):
         dbapi.connect(port=endpoint.port, on_truncate="loud")
+
+
+
+@pytest.mark.parametrize("code, body, stall", [
+    (400, b'{"error": "no such table"}', False),  # -> ProgrammingError
+    (503, b"upstream down", False),  # transport error -> OperationalError
+    (503, b"upstream", True),  # body stalls past the client timeout
+])
+def test_error_response_is_closed_before_raising(monkeypatch, code, body, stall):
+    """An HTTP error response owns its socket: the client closes it
+    before raising. Reading a whole body closes it anyway; a body read
+    that fails (here: the server stalls mid-body) used to leave it open
+    for as long as the raised error, which chains the response, lived.
+    Run under ``error::ResourceWarning``, so a socket dropped unclosed
+    would also fail the test."""
+    import gc
+    import sys
+    import threading
+    import time
+    import urllib.error
+    import urllib.request
+    import warnings
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    class Failing(BaseHTTPRequestHandler):
+        def log_message(self, *args):
+            pass
+
+        def do_POST(self):
+            self.rfile.read(int(self.headers["Content-Length"]))
+            self.send_response(code)
+            self.send_header("Content-Length", str(len(body) + 100 * stall))
+            self.end_headers()
+            self.wfile.write(body)
+            if stall:
+                self.wfile.flush()
+                time.sleep(2)
+
+    seen = []
+    urlopen = urllib.request.urlopen
+
+    def recording_urlopen(*args, **kwargs):
+        try:
+            return urlopen(*args, **kwargs)
+        except urllib.error.HTTPError as e:
+            seen.append(e)  # keeps the error, and its socket, alive
+            raise
+
+    monkeypatch.setattr(urllib.request, "urlopen", recording_urlopen)
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Failing)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    unraisable = []
+    old_hook = sys.unraisablehook
+    sys.unraisablehook = unraisable.append
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", ResourceWarning)
+            conn = dbapi.connect(port=srv.server_address[1], timeout=0.5)
+            with pytest.raises(dbapi.DatabaseError):
+                conn.cursor().execute("SELECT 1")
+            assert len(seen) == 1
+            assert seen[0].fp.isclosed()
+            seen.clear()
+            gc.collect()
+    finally:
+        sys.unraisablehook = old_hook
+        srv.shutdown()
+        srv.server_close()
+    assert [u for u in unraisable if isinstance(u.exc_value, ResourceWarning)] == []
