@@ -18,12 +18,18 @@ the dependency-free equivalent so the engine is self-contained:
 - time travel = read the file list recorded at version N;
 - snapshots() = the manifest as a DataFrame (the ``.snapshots`` analog).
 
-Concurrency: commits serialize through a per-table lock file acquired
-with an atomic O_EXCL create, so concurrent writers (threads or
-processes on one filesystem) linearize — both commits land, neither
-clobbers the manifest. On an object store you'd replace the lock with
-the catalog service's conditional PUT / CAS (Iceberg REST commit);
-the call sites don't change.
+Concurrency: every manifest write — data commits, schema DDL, branch
+and WAP ops, expiry, and the tag file — happens under a per-table lock
+file acquired with an atomic O_EXCL create, against a manifest loaded
+under that lock. Concurrent writers (threads or processes on one
+filesystem) therefore linearize: both commits land, neither clobbers
+the manifest, and expiry never reclaims a dir a commit just wrote.
+Metadata-only ops (DDL, branches, publish, rollback, clone, MOR
+deletes) share one commit path, :meth:`Catalog._meta_commit`, which
+carries the base snapshot's fields forward and stamps the new entry.
+On an object store you'd replace the lock with the catalog service's
+conditional PUT / CAS (Iceberg REST commit); the call sites don't
+change.
 """
 
 from __future__ import annotations
@@ -75,6 +81,37 @@ def _fsync_dir(path: str) -> None:
         pass
     finally:
         os.close(fd)
+
+
+def _write_json(path: str, obj) -> None:
+    """Atomically replace ``path`` with ``obj`` as JSON, durable across
+    power loss: write a tmp file, fsync it, rename it over ``path``,
+    fsync the directory. Readers see the old or the new file, never a
+    torn one — manifests, tags (a retention contract expiry trusts),
+    stats sidecars, views and transaction intents all rely on it."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    _fsync_dir(os.path.dirname(path))
+
+
+def _read_json(path: str, default):
+    """The JSON at ``path``, or ``default`` when the file is absent."""
+    if not os.path.exists(path):
+        return default
+    with open(path) as f:
+        return json.load(f)
+
+
+#: what a metadata-only commit carries from its base snapshot unless
+#: the op changes it (see Catalog._meta_commit)
+_CARRIED = (
+    "data_dirs", "delete_dirs", "schema", "partition_by",
+    "partition_transforms", "properties", "stats",
+)
 
 
 def _parse_transform(spec: str):
@@ -146,25 +183,21 @@ class Catalog:
         return TableHandle(name, os.path.join(self.root, name))
 
     def _load_manifest(self, h: TableHandle) -> list[dict]:
-        if not os.path.exists(h.manifest_path):
-            return []
-        with open(h.manifest_path) as f:
-            return json.load(f)
+        return _read_json(h.manifest_path, [])
+
+    def _entries(self, name: str) -> tuple[TableHandle, list[dict]]:
+        """(handle, manifest entries) of an existing table, else raise."""
+        h = self._handle(name)
+        entries = self._load_manifest(h)
+        if not entries:
+            raise ValueError(f"table {name} does not exist")
+        return h, entries
 
     def _save_manifest(self, h: TableHandle, entries: list[dict]) -> None:
-        # fsync file AND directory: a manifest flip that survives power
-        # loss while the txn-intent file vanishes (or vice versa) would
-        # leave torn cross-table state recovery can't see. Durable
-        # manifests + durable intents make "crash anywhere after the
-        # intent write rolls FORWARD" hold for power loss, not just
-        # process crashes.
-        tmp = h.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(entries, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, h.manifest_path)
-        _fsync_dir(os.path.dirname(h.manifest_path))
+        # durable manifests + durable txn intents make "crash anywhere
+        # after the intent write rolls FORWARD" hold for power loss,
+        # not just process crashes
+        _write_json(h.manifest_path, entries)
 
     # -- DDL ---------------------------------------------------------------
     def table_exists(self, name: str) -> bool:
@@ -311,46 +344,38 @@ class Catalog:
         return os.path.join(h.path, "_tags.json")
 
     def _load_tags(self, h: TableHandle) -> dict[str, int]:
-        if not os.path.exists(self._tags_path(h)):
-            return {}
-        with open(self._tags_path(h)) as f:
-            return json.load(f)
+        return _read_json(self._tags_path(h), {})
 
     def create_tag(self, name: str, tag: str, version: int | None = None) -> None:
         """Named immutable pointer to a snapshot (Iceberg tag).
         Tagged snapshots are RETAINED by :meth:`expire_snapshots`
         regardless of ``keep_last`` — a tag is a retention contract
-        (audit snapshots, model-training data freezes)."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
-        v = (
-            version
-            if version is not None
-            else self._main_head(entries, name)["version"]
-        )
-        if entries[v].get("expired"):
-            raise ValueError(f"version {v} of {name} has been expired")
-        tags = self._load_tags(h)
-        if tag in tags:
-            raise ValueError(f"tag {tag!r} already exists on {name}")
-        tags[tag] = v
-        tmp = self._tags_path(h) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(tags, f, indent=1)
-        os.replace(tmp, self._tags_path(h))
+        (audit snapshots, model-training data freezes). Written under
+        the commit lock, so the "not expired" check cannot interleave
+        with an expiry."""
+        with self._commit_lock(self._handle(name)):
+            h, entries = self._entries(name)
+            v = (
+                version
+                if version is not None
+                else self._main_head(entries, name)["version"]
+            )
+            if entries[v].get("expired"):
+                raise ValueError(f"version {v} of {name} has been expired")
+            tags = self._load_tags(h)
+            if tag in tags:
+                raise ValueError(f"tag {tag!r} already exists on {name}")
+            tags[tag] = v
+            _write_json(self._tags_path(h), tags)
 
     def drop_tag(self, name: str, tag: str) -> None:
         h = self._handle(name)
-        tags = self._load_tags(h)
-        if tag not in tags:
-            raise ValueError(f"tag {tag!r} does not exist on {name}")
-        del tags[tag]
-        tmp = self._tags_path(h) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(tags, f, indent=1)
-        os.replace(tmp, self._tags_path(h))
+        with self._commit_lock(h):
+            tags = self._load_tags(h)
+            if tag not in tags:
+                raise ValueError(f"tag {tag!r} does not exist on {name}")
+            del tags[tag]
+            _write_json(self._tags_path(h), tags)
 
     def create_branch(
         self, name: str, branch: str, version: int | None = None
@@ -361,11 +386,8 @@ class Catalog:
         experiment isolation — WAP generalized past one staging slot).
         Zero data movement: the branch entry references the base
         snapshot's dirs."""
-        h = self._handle(name)
-        with self._commit_lock(h):
-            entries = self._load_manifest(h)
-            if not entries:
-                raise ValueError(f"table {name} does not exist")
+
+        def change(entries):
             if self._branch_head(entries, branch) is not None:
                 raise ValueError(f"branch {branch!r} already exists on {name}")
             base = (
@@ -375,26 +397,9 @@ class Catalog:
             )
             if base is None or base.get("expired"):
                 raise ValueError(f"no usable base snapshot for branch {branch!r}")
-            entries.append(
-                {
-                    "version": len(entries),
-                    "op": "create_branch",
-                    "branch": branch,
-                    "base_version": base["version"],
-                    "committed_at": time.strftime(
-                        "%Y-%m-%d %H:%M:%S", time.gmtime()
-                    ),
-                    "data_dirs": list(base["data_dirs"]),
-                    "delete_dirs": list(base.get("delete_dirs") or []),
-                    "schema": base["schema"],
-                    "partition_by": base.get("partition_by"),
-                    "partition_transforms": base.get("partition_transforms"),
-                    "properties": base.get("properties") or {},
-                    "stats": base.get("stats"),
-                }
-            )
-            self._save_manifest(h, entries)
-        return h
+            return base, {"branch": branch, "base_version": base["version"]}
+
+        return self._meta_commit(self._handle(name), "create_branch", change)
 
     def drop_branch(self, name: str, branch: str) -> None:
         """Remove a branch ref: its entries stop resolving (reads and
@@ -419,9 +424,8 @@ class Catalog:
         base — if main diverged since the branch was cut, refuse (a
         silent overwrite would drop main's commits; merge by rebasing
         the branch work instead)."""
-        h = self._handle(name)
-        with self._commit_lock(h):
-            entries = self._load_manifest(h)
+
+        def change(entries):
             head = self._branch_head(entries, branch)
             if head is None:
                 raise ValueError(f"branch {branch!r} does not exist on {name}")
@@ -438,55 +442,22 @@ class Catalog:
                     f"{main_head['version'] if main_head else None} since the "
                     "branch was cut — rebase the branch instead"
                 )
-            entries.append(
-                {
-                    "version": len(entries),
-                    "op": "fast_forward",
-                    "committed_at": time.strftime(
-                        "%Y-%m-%d %H:%M:%S", time.gmtime()
-                    ),
-                    "data_dirs": list(head["data_dirs"]),
-                    "delete_dirs": list(head.get("delete_dirs") or []),
-                    "schema": head["schema"],
-                    "partition_by": head.get("partition_by"),
-                    "partition_transforms": head.get("partition_transforms"),
-                    "properties": head.get("properties") or {},
-                    "stats": head.get("stats"),
-                }
-            )
-            self._save_manifest(h, entries)
-        return h
+            return head, {}
+
+        return self._meta_commit(self._handle(name), "fast_forward", change)
 
     def publish(self, name: str) -> TableHandle:
         """WAP publish: make the latest staged snapshot current by
         committing a new (unstaged) version referencing its dirs —
         zero data movement, atomic manifest flip."""
-        h = self._handle(name)
-        with self._commit_lock(h):
-            entries = self._load_manifest(h)
-            target = self._branch_head(entries, None) if entries else None
+
+        def change(entries):
+            target = self._branch_head(entries, None)
             if target is None or not target.get("staged"):
                 raise ValueError(f"{name}: nothing staged to publish")
-            entries.append(
-                {
-                    "version": len(entries),
-                    "op": "publish",
-                    "committed_at": time.strftime(
-                        "%Y-%m-%d %H:%M:%S", time.gmtime()
-                    ),
-                    "data_dirs": list(target["data_dirs"]),
-                    "delete_dirs": list(target.get("delete_dirs") or []),
-                    "schema": target["schema"],
-                    "partition_by": target.get("partition_by"),
-                    "partition_transforms": target.get(
-                        "partition_transforms"
-                    ),
-                    "properties": target.get("properties") or {},
-                    "stats": target.get("stats"),
-                }
-            )
-            self._save_manifest(h, entries)
-        return h
+            return target, {}
+
+        return self._meta_commit(self._handle(name), "publish", change)
 
     def overwrite(
         self, name: str, df: DataFrame, *, staged: bool = False
@@ -569,6 +540,64 @@ class Catalog:
             with contextlib.suppress(OSError):
                 os.unlink(lock)
 
+    @staticmethod
+    def _check_version(
+        h: TableHandle, op: str, entries: list[dict],
+        expected_version: int | None,
+    ) -> None:
+        """Refuse a commit built against a manifest that has since grown
+        (a concurrent writer landed between the caller's read and its
+        commit): the caller's work would silently drop that commit."""
+        if expected_version is not None and len(entries) != expected_version:
+            raise RuntimeError(
+                f"concurrent modification of {h.name}: {op} built against "
+                f"version {expected_version - 1} but table is now at "
+                f"{len(entries) - 1}; re-read and retry"
+            )
+
+    def _meta_commit(
+        self, h: TableHandle, op: str, change, *,
+        expected_version: int | None = None,
+    ) -> TableHandle:
+        """The one commit path for manifest-only changes (schema DDL,
+        partition spec, branch / WAP / rollback refs, clones, MOR delete
+        files). Under the table's commit lock it loads the manifest,
+        checks ``expected_version``, and calls ``change(entries)``,
+        which validates against that locked manifest and returns
+        ``(base entry, fields that differ)`` — or ``None`` for an
+        idempotent no-op. The new entry carries every ``_CARRIED`` field
+        from the base (dropping delete_dirs would resurrect MOR-deleted
+        rows), overlays the changed fields and lands as the next
+        version. ``change`` may write files under the lock (delete
+        dirs) but must not call a locking public method: the lock is
+        not re-entrant.
+
+        A missing table raises, except with ``expected_version=0``: the
+        commit then CREATES the table (clone)."""
+        with self._commit_lock(h):
+            entries = self._load_manifest(h)
+            self._check_version(h, op, entries, expected_version)
+            if not entries and expected_version is None:
+                raise ValueError(f"table {h.name} does not exist")
+            out = change(entries)
+            if out is None:
+                return h
+            base, fields = out
+            entries.append(
+                {
+                    **{k: base.get(k) for k in _CARRIED},
+                    "data_dirs": list(base["data_dirs"]),
+                    "delete_dirs": list(base.get("delete_dirs") or []),
+                    "properties": base.get("properties") or {},
+                    "version": len(entries),
+                    "op": op,
+                    "committed_at": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
+                    **fields,
+                }
+            )
+            self._save_manifest(h, entries)
+        return h
+
     def _commit_locked(
         self,
         h: TableHandle,
@@ -585,12 +614,7 @@ class Catalog:
         extra_eq_delete=None,
     ) -> TableHandle:
         entries = self._load_manifest(h)
-        if expected_version is not None and len(entries) != expected_version:
-            raise RuntimeError(
-                f"concurrent modification of {h.name}: commit built against "
-                f"version {expected_version - 1} but table is now at "
-                f"{len(entries) - 1}; re-read and retry"
-            )
+        self._check_version(h, op, entries, expected_version)
         if branch is not None and self._branch_head(entries, branch) is None:
             raise ValueError(
                 f"branch {branch!r} does not exist on {h.name}: create_branch first"
@@ -710,33 +734,16 @@ class Catalog:
             # delete's seq equals this commit's version, so this
             # commit's own data dir (seq == version) is NOT suppressed
             # (strictly-lower rule) while every prior dir is.
+            # foreign (cloned) dirs get their coverage pinned to the
+            # PRE-commit snapshot: this commit's own data dir must stay
+            # outside the scope — the equal-seq tie the local rule
+            # breaks by strictness
             eq_keys, eq_cols = extra_eq_delete
             edir = f"e{version:05d}"
             eq_keys.select(*eq_cols).distinct().coalesce(1).write.mode(
                 "overwrite"
             ).parquet(os.path.join(h.path, edir))
-            fid_by_name = (
-                {
-                    f["name"]: (f.get("metadata") or {}).get("field_id")
-                    for f in prev["schema"]["fields"]
-                }
-                if prev
-                else {}
-            )
-            rec = {
-                "dir": edir,
-                "cols": list(eq_cols),
-                "field_ids": [fid_by_name.get(c) for c in eq_cols],
-                "seq": version,
-            }
-            # foreign (cloned) dirs live in their source's version
-            # space: pin coverage to the PRE-commit snapshot (this
-            # commit's own data dir must stay outside the scope — the
-            # equal-seq tie the local rule breaks by strictness)
-            self._pin_eq_scope(
-                rec, list(prev["data_dirs"]) if prev else []
-            )
-            ddirs = ddirs + [rec]
+            ddirs = ddirs + [self._eq_delete_record(edir, eq_cols, prev, version)]
         schema_json = self._assign_field_ids(
             json.loads(df.schema.json()), entries, prev=prev
         )
@@ -857,11 +864,9 @@ class Catalog:
         type (their builds predate alter_column_type support)."""
         import base64
 
-        path = os.path.join(dir_path, f"_bloom_{col}.json")
-        if not os.path.exists(path):
+        payload = _read_json(os.path.join(dir_path, f"_bloom_{col}.json"), None)
+        if payload is None:
             return True
-        with open(path) as f:
-            payload = json.load(f)
         btype = payload.get("type") or declared_type
         key = (col, btype)
         if key not in pos_cache:
@@ -1026,29 +1031,22 @@ class Catalog:
         didn't exist, or without it) reads the default back instead of
         NULL — still zero rewrite, the value lives only in the field
         metadata."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
-        last = self._main_head(entries, name)
-        fields = last["schema"]["fields"]
-        if any(f["name"] == col_name for f in fields):
-            return  # idempotent no-op
-        new_schema = dict(last["schema"])
-        md: dict = {"field_id": self._max_field_id(entries) + 1}
-        if comment:
-            md["comment"] = comment
-        if default is not None:
-            md["default"] = default
-        new_schema["fields"] = fields + [
-            {
-                "name": col_name,
-                "type": col_type,
-                "nullable": True,
-                "metadata": md,
-            }
-        ]
-        self._schema_commit(h, entries, "add_column", new_schema)
+
+        def change(entries):
+            base = self._main_head(entries, name)
+            fields = base["schema"]["fields"]
+            if any(f["name"] == col_name for f in fields):
+                return None  # idempotent no-op
+            md: dict = {"field_id": self._max_field_id(entries) + 1}
+            if comment:
+                md["comment"] = comment
+            if default is not None:
+                md["default"] = default
+            new = {"name": col_name, "type": col_type, "nullable": True,
+                   "metadata": md}
+            return base, {"schema": {**base["schema"], "fields": fields + [new]}}
+
+        self._meta_commit(self._handle(name), "add_column", change)
 
     #: Zero-rewrite type promotions: every old on-disk value is exactly
     #: representable in the new type (Iceberg's safe-widening set).
@@ -1080,30 +1078,29 @@ class Catalog:
         decimal precision growth): old files keep their narrow physical
         type and reads cast per directory to the target schema; a
         narrowing or re-interpreting change raises."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
-        last = self._main_head(entries, name)
-        fields = last["schema"]["fields"]
-        cur = next((f for f in fields if f["name"] == col_name), None)
-        if cur is None:
-            raise ValueError(f"column {col_name} does not exist in {name}")
-        if cur["type"] == new_type:
-            return  # idempotent no-op
-        if not self._is_safe_promotion(cur["type"], new_type):
-            raise ValueError(
-                f"cannot alter {name}.{col_name} from {cur['type']} to "
-                f"{new_type}: only widening promotions are zero-rewrite "
-                f"(allowed: short→int→long, float→double, decimal "
-                "precision growth)"
-            )
-        new_schema = dict(last["schema"])
-        new_schema["fields"] = [
-            {**f, "type": new_type} if f["name"] == col_name else f
-            for f in fields
-        ]
-        self._schema_commit(h, entries, "alter_column_type", new_schema)
+
+        def change(entries):
+            base = self._main_head(entries, name)
+            fields = base["schema"]["fields"]
+            cur = next((f for f in fields if f["name"] == col_name), None)
+            if cur is None:
+                raise ValueError(f"column {col_name} does not exist in {name}")
+            if cur["type"] == new_type:
+                return None  # idempotent no-op
+            if not self._is_safe_promotion(cur["type"], new_type):
+                raise ValueError(
+                    f"cannot alter {name}.{col_name} from {cur['type']} to "
+                    f"{new_type}: only widening promotions are zero-rewrite "
+                    f"(allowed: short→int→long, float→double, decimal "
+                    "precision growth)"
+                )
+            fields = [
+                {**f, "type": new_type} if f["name"] == col_name else f
+                for f in fields
+            ]
+            return base, {"schema": {**base["schema"], "fields": fields}}
+
+        self._meta_commit(self._handle(name), "alter_column_type", change)
 
     def rename_column(self, name: str, old: str, new: str) -> None:
         """ALTER TABLE RENAME COLUMN without rewrite (manifest-only).
@@ -1113,23 +1110,20 @@ class Catalog:
         rename semantics, impossible with pure name-based parquet
         schema merge. Partition columns are refused (their old name is
         baked into directory layouts)."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
-        last = self._main_head(entries, name)
-        if old in (last.get("partition_by") or []):
-            raise ValueError(f"cannot rename partition column {old}")
-        fields = last["schema"]["fields"]
-        if not any(f["name"] == old for f in fields):
-            raise ValueError(f"column {old} does not exist in {name}")
-        if any(f["name"] == new for f in fields):
-            raise ValueError(f"column {new} already exists in {name}")
-        new_schema = dict(last["schema"])
-        new_schema["fields"] = [
-            {**f, "name": new} if f["name"] == old else f for f in fields
-        ]
-        self._schema_commit(h, entries, "rename_column", new_schema)
+
+        def change(entries):
+            base = self._main_head(entries, name)
+            if old in (base.get("partition_by") or []):
+                raise ValueError(f"cannot rename partition column {old}")
+            fields = base["schema"]["fields"]
+            if not any(f["name"] == old for f in fields):
+                raise ValueError(f"column {old} does not exist in {name}")
+            if any(f["name"] == new for f in fields):
+                raise ValueError(f"column {new} already exists in {name}")
+            fields = [{**f, "name": new} if f["name"] == old else f for f in fields]
+            return base, {"schema": {**base["schema"], "fields": fields}}
+
+        self._meta_commit(self._handle(name), "rename_column", change)
 
     def drop_column(self, name: str, col_name: str) -> None:
         """ALTER TABLE DROP COLUMN without rewrite (manifest-only): the
@@ -1137,40 +1131,40 @@ class Catalog:
         stay in old files (and in time travel) until snapshots expire.
         A later :meth:`add_column` with the same name gets a FRESH field
         id, so it reads back NULL instead of resurrecting dropped data."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
-        last = self._main_head(entries, name)
-        if col_name in (last.get("partition_by") or []):
-            raise ValueError(f"cannot drop partition column {col_name}")
-        # a live equality delete matches rows BY this column — dropping
-        # it would leave every read with an unresolvable key reference
-        fid = next(
-            (
-                (f.get("metadata") or {}).get("field_id")
-                for f in last["schema"]["fields"]
-                if f["name"] == col_name
-            ),
-            None,
-        )
-        for rec in self._dd_split(last.get("delete_dirs") or [])[1]:
-            fids = rec.get("field_ids") or []
-            if col_name in rec.get("cols", []) or (
-                fid is not None and fid in fids
-            ):
-                raise ValueError(
-                    f"cannot drop {col_name}: a live equality delete "
-                    f"({rec['dir']}) matches on it; run "
-                    "rewrite_position_deletes first to fold the delete "
-                    "into the data"
-                )
-        fields = last["schema"]["fields"]
-        if not any(f["name"] == col_name for f in fields):
-            raise ValueError(f"column {col_name} does not exist in {name}")
-        new_schema = dict(last["schema"])
-        new_schema["fields"] = [f for f in fields if f["name"] != col_name]
-        self._schema_commit(h, entries, "drop_column", new_schema)
+
+        def change(entries):
+            base = self._main_head(entries, name)
+            if col_name in (base.get("partition_by") or []):
+                raise ValueError(f"cannot drop partition column {col_name}")
+            fields = base["schema"]["fields"]
+            # a live equality delete matches rows BY this column —
+            # dropping it would leave every read with an unresolvable
+            # key reference
+            fid = next(
+                (
+                    (f.get("metadata") or {}).get("field_id")
+                    for f in fields
+                    if f["name"] == col_name
+                ),
+                None,
+            )
+            for rec in self._dd_split(base.get("delete_dirs") or [])[1]:
+                fids = rec.get("field_ids") or []
+                if col_name in rec.get("cols", []) or (
+                    fid is not None and fid in fids
+                ):
+                    raise ValueError(
+                        f"cannot drop {col_name}: a live equality delete "
+                        f"({rec['dir']}) matches on it; run "
+                        "rewrite_position_deletes first to fold the delete "
+                        "into the data"
+                    )
+            if not any(f["name"] == col_name for f in fields):
+                raise ValueError(f"column {col_name} does not exist in {name}")
+            fields = [f for f in fields if f["name"] != col_name]
+            return base, {"schema": {**base["schema"], "fields": fields}}
+
+        self._meta_commit(self._handle(name), "drop_column", change)
 
     def set_partition_spec(
         self, name: str, partition_by: list[str] | None
@@ -1188,61 +1182,13 @@ class Catalog:
         evolves). Accepts the same transform specs as
         :meth:`create_table` (``days(ts)``, ``bucket(n, col)``, ...);
         ``None`` switches to unpartitioned appends."""
-        h = self._handle(name)
-        with self._commit_lock(h):
-            entries = self._load_manifest(h)
-            if not entries:
-                raise ValueError(f"table {name} does not exist")
-            last = self._main_head(entries, name)
-            entries.append(
-                {
-                    "version": len(entries),
-                    "op": "set_partition_spec",
-                    "committed_at": time.strftime(
-                        "%Y-%m-%d %H:%M:%S", time.gmtime()
-                    ),
-                    "data_dirs": list(last["data_dirs"]),
-                    "delete_dirs": list(last.get("delete_dirs") or []),
-                    "schema": last["schema"],
-                    "partition_by": last.get("partition_by"),
-                    # [] = explicitly unpartitioned (None would read as
-                    # a legacy manifest and fall back to partition_by)
-                    "partition_transforms": (
-                        partition_by if partition_by is not None else []
-                    ),
-                    "properties": last.get("properties") or {},
-                    "stats": last.get("stats"),
-                }
-            )
-            self._save_manifest(h, entries)
-
-    def _schema_commit(
-        self, h: TableHandle, entries: list[dict], op: str, new_schema: dict
-    ) -> None:
-        # base on the MAIN head, not the manifest tail (a branch commit
-        # may be the tail), and carry delete_dirs: dropping them on a
-        # schema DDL would resurrect merge-on-read-deleted rows
-        base = self._main_head(entries, h.name)
-        entries.append(
-            {
-                **{
-                    k: base.get(k)
-                    for k in (
-                        "data_dirs",
-                        "delete_dirs",
-                        "partition_by",
-                        "partition_transforms",
-                        "properties",
-                        "stats",
-                    )
-                },
-                "version": len(entries),
-                "op": op,
-                "committed_at": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
-                "schema": new_schema,
-            }
+        # [] = explicitly unpartitioned (None would read as a legacy
+        # manifest and fall back to partition_by)
+        spec = {"partition_transforms": partition_by if partition_by is not None else []}
+        self._meta_commit(
+            self._handle(name), "set_partition_spec",
+            lambda entries: (self._main_head(entries, name), spec),
         )
-        self._save_manifest(h, entries)
 
     # -- maintenance -------------------------------------------------------
     def compact(
@@ -1274,10 +1220,7 @@ class Catalog:
         matters: the daily job compacts yesterday's partition, never
         the table.
         """
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         head = self._main_head(entries, name)
         pb = head.get("partition_by")
 
@@ -1326,28 +1269,12 @@ class Catalog:
             r["_cow_file"]
             for r in cur.filter(is_hit).select("_cow_file").distinct().collect()
         ]
-        touched = [
-            d
-            for d in live
-            if any(
-                re.sub(r"^file:/+", "/", fp).startswith(self._dir_abs(h, d))
-                for fp in hit_files
-            )
-        ]
+        touched, kept, in_touched = self._touched_dirs(h, live, hit_files)
         if not touched:
             return {
                 "table": name, "files_before": 0, "files_after": 0,
                 "bytes": 0, "rewritten_dirs": [], "kept_dirs": list(live),
             }
-        kept = [d for d in live if d not in touched]
-        in_touched = functools.reduce(
-            lambda a, b: a | b,
-            [
-                F.regexp_replace(F.col("_cow_file"), "^file:/+", "/")
-                .startswith(self._dir_abs(h, d))
-                for d in touched
-            ],
-        )
         files_before = len(hit_files)
         bytes_touched = sum(self._dir_bytes(h, d) for d in touched)
         n_files = max(1, -(-bytes_touched // target_file_bytes))
@@ -1385,6 +1312,25 @@ class Catalog:
         cloned dirs and would make COW DML no-op on their rows)."""
         return os.path.normpath(os.path.join(h.path, d)) + os.sep
 
+    def _touched_dirs(self, h: TableHandle, live: list[str], hit_files):
+        """Split snapshot dirs ``live`` by the data files holding matching
+        rows (``_cow_file`` lineage values) → ``(touched, kept,
+        in_touched)``: the dirs to rewrite, the dirs to carry forward
+        unmodified, and a Column that is true for rows of a touched dir."""
+        touched = [
+            d
+            for d in live
+            if any(re.sub(r"^file:/+", "/", fp).startswith(self._dir_abs(h, d))
+                   for fp in hit_files)
+        ]
+        kept = [d for d in live if d not in touched]
+        file_path = F.regexp_replace(F.col("_cow_file"), "^file:/+", "/")
+        in_touched = functools.reduce(
+            lambda a, b: a | b,
+            [file_path.startswith(self._dir_abs(h, d)) for d in touched],
+        ) if touched else F.lit(False)
+        return touched, kept, in_touched
+
     def _cow_rewrite(
         self,
         name: str,
@@ -1400,10 +1346,7 @@ class Catalog:
         scoped to one day rewrites one day, not the table). Time travel
         to the pre-DML version keeps working; readers flip atomically
         with the manifest."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         cond = F.expr(condition) if isinstance(condition, str) else condition
         # SQL DML semantics: only cond IS TRUE rows are affected;
         # FALSE and NULL rows are kept verbatim.
@@ -1422,24 +1365,10 @@ class Catalog:
             r["_cow_file"]
             for r in cur.filter(is_hit).select("_cow_file").distinct().collect()
         ]
-        touched = [
-            d
-            for d in live
-            if any(re.sub(r"^file:/+", "/", fp).startswith(self._dir_abs(h, d))
-                   for fp in hit_files)
-        ]
+        touched, kept, in_touched = self._touched_dirs(h, live, hit_files)
         if not touched:
             return {"table": name, "affected_rows": 0,
                     "rewritten_dirs": [], "kept_dirs": list(live)}
-        kept = [d for d in live if d not in touched]
-        in_touched = functools.reduce(
-            lambda a, b: a | b,
-            [
-                F.regexp_replace(F.col("_cow_file"), "^file:/+", "/")
-                .startswith(self._dir_abs(h, d))
-                for d in touched
-            ],
-        )
         affected = cur.filter(is_hit).count()
         rewritten = build_rewritten(
             cur.filter(in_touched), is_hit
@@ -1512,11 +1441,7 @@ class Catalog:
         addressing the matching rows by (file path, row index); data
         dirs are untouched. O(matching rows) write instead of O(touched
         dirs) — deletes cost what they delete."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
-        base_version = len(entries)
+        h, entries = self._entries(name)
         cond = F.expr(condition) if isinstance(condition, str) else condition
         is_hit = F.coalesce(cond, F.lit(False))
         positions = (
@@ -1529,38 +1454,16 @@ class Catalog:
         if affected == 0:
             return {"table": name, "affected_rows": 0, "delete_dir": None,
                     "rewritten_dirs": [], "kept_dirs": live}
-        with self._commit_lock(h):
-            entries = self._load_manifest(h)
-            if len(entries) != base_version:
-                raise RuntimeError(
-                    f"concurrent modification of {h.name}: MOR delete built "
-                    f"against version {base_version - 1} but table is now at "
-                    f"{len(entries) - 1}; re-read and retry"
-                )
-            version = len(entries)
-            ddir = f"d{version:05d}"
-            positions.write.mode("overwrite").parquet(
-                os.path.join(h.path, ddir)
-            )
-            prev = self._main_head(entries, name)
-            entries.append(
-                {
-                    "version": version,
-                    "op": "delete_mor",
-                    "committed_at": time.strftime(
-                        "%Y-%m-%d %H:%M:%S", time.gmtime()
-                    ),
-                    "data_dirs": list(prev["data_dirs"]),
-                    "delete_dirs": list(prev.get("delete_dirs") or [])
-                    + [ddir],
-                    "schema": prev["schema"],
-                    "partition_by": prev.get("partition_by"),
-                    "partition_transforms": prev.get("partition_transforms"),
-                    "properties": prev.get("properties") or {},
-                    "stats": prev.get("stats"),
-                }
-            )
-            self._save_manifest(h, entries)
+        # the version check pins the commit to len(entries), so the
+        # delete dir is named before the lock is taken
+        ddir = f"d{len(entries):05d}"
+
+        def change(locked):
+            positions.write.mode("overwrite").parquet(os.path.join(h.path, ddir))
+            base = self._main_head(locked, name)
+            return base, {"delete_dirs": list(base.get("delete_dirs") or []) + [ddir]}
+
+        self._meta_commit(h, "delete_mor", change, expected_version=len(entries))
         return {"table": name, "affected_rows": affected, "delete_dir": ddir,
                 "rewritten_dirs": [], "kept_dirs": live}
 
@@ -1611,11 +1514,7 @@ class Catalog:
         """Merge-on-read equality DELETE: commit the distinct key
         tuples of the matching rows as an equality-delete file. See
         :meth:`delete_where` (mode='mor-eq') for semantics."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
-        base_version = len(entries)
+        h, entries = self._entries(name)
         head = self._main_head(entries, name)
         have = {f["name"] for f in head["schema"]["fields"]}
         missing = [c for c in equality_cols if c not in have]
@@ -1638,88 +1537,46 @@ class Catalog:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
-            return self._mor_eq_delete_persisted(
-                h, name, equality_cols, keys, head, base_version
+            n_keys = keys.count()
+            live = list(head["data_dirs"])
+            if n_keys == 0:
+                return {"table": name, "affected_rows": 0, "deleted_keys": 0,
+                        "delete_dir": None, "rewritten_dirs": [],
+                        "kept_dirs": live}
+            # rows the delete will suppress: every CURRENT row sharing a
+            # matching key (key scope, not condition scope)
+            match = F.lit(True)
+            probe = keys.select(
+                *[F.col(c).alias(f"_k_{c}") for c in equality_cols]
             )
+            for c in equality_cols:
+                match = match & F.col(c).eqNullSafe(F.col(f"_k_{c}"))
+            affected = (
+                self.read(name)
+                .join(F.broadcast(probe), match, "left_semi")
+                .count()
+            )
+            version = len(entries)
+            ddir = f"e{version:05d}"
+
+            def change(locked):
+                keys.coalesce(1).write.mode("overwrite").parquet(
+                    os.path.join(h.path, ddir)
+                )
+                base = self._main_head(locked, name)
+                rec = self._eq_delete_record(ddir, equality_cols, base, version)
+                return base, {
+                    "delete_dirs": list(base.get("delete_dirs") or []) + [rec]
+                }
+
+            self._meta_commit(h, "delete_mor_eq", change, expected_version=version)
+            return {"table": name, "affected_rows": affected,
+                    "deleted_keys": n_keys, "delete_dir": ddir,
+                    "rewritten_dirs": [], "kept_dirs": live}
         finally:
             # also covers the concurrent-modification raise: the
             # persisted keys frame must never outlive the call
             keys.unpersist(blocking=False)
-
-    def _mor_eq_delete_persisted(
-        self, h, name, equality_cols, keys, head, base_version
-    ) -> dict:
-        n_keys = keys.count()
-        live = list(head["data_dirs"])
-        if n_keys == 0:
-            return {"table": name, "affected_rows": 0, "deleted_keys": 0,
-                    "delete_dir": None, "rewritten_dirs": [],
-                    "kept_dirs": live}
-        # rows the delete will suppress: every CURRENT row sharing a
-        # matching key (key scope, not condition scope)
-        match = F.lit(True)
-        probe = keys.select(
-            *[F.col(c).alias(f"_k_{c}") for c in equality_cols]
-        )
-        for c in equality_cols:
-            match = match & F.col(c).eqNullSafe(F.col(f"_k_{c}"))
-        affected = (
-            self.read(name)
-            .join(F.broadcast(probe), match, "left_semi")
-            .count()
-        )
-        with self._commit_lock(h):
-            entries = self._load_manifest(h)
-            if len(entries) != base_version:
-                raise RuntimeError(
-                    f"concurrent modification of {h.name}: equality "
-                    f"delete built against version {base_version - 1} but "
-                    f"table is now at {len(entries) - 1}; re-read and retry"
-                )
-            version = len(entries)
-            ddir = f"e{version:05d}"
-            keys.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(h.path, ddir)
-            )
-            prev = self._main_head(entries, name)
-            rec = {
-                "dir": ddir,
-                "cols": list(equality_cols),
-                # stable ids so reads resolve through renames
-                # (in equality_cols order, not schema order)
-                "field_ids": [
-                    {
-                        f["name"]: (f.get("metadata") or {}).get(
-                            "field_id"
-                        )
-                        for f in prev["schema"]["fields"]
-                    }.get(c)
-                    for c in equality_cols
-                ],
-                "seq": version,
-            }
-            self._pin_eq_scope(rec, prev["data_dirs"])
-            entries.append(
-                {
-                    "version": version,
-                    "op": "delete_mor_eq",
-                    "committed_at": time.strftime(
-                        "%Y-%m-%d %H:%M:%S", time.gmtime()
-                    ),
-                    "data_dirs": list(prev["data_dirs"]),
-                    "delete_dirs": list(prev.get("delete_dirs") or [])
-                    + [rec],
-                    "schema": prev["schema"],
-                    "partition_by": prev.get("partition_by"),
-                    "partition_transforms": prev.get("partition_transforms"),
-                    "properties": prev.get("properties") or {},
-                    "stats": prev.get("stats"),
-                }
-            )
-            self._save_manifest(h, entries)
-        return {"table": name, "affected_rows": affected,
-                "deleted_keys": n_keys, "delete_dir": ddir,
-                "rewritten_dirs": [], "kept_dirs": live}
 
     def rewrite_position_deletes(self, name: str) -> dict:
         """Maintenance: fold accumulated merge-on-read deletes — both
@@ -1727,10 +1584,7 @@ class Catalog:
         ``rewrite_position_delete_files`` / compaction analog): one
         replace commit of the merged view; subsequent reads pay no
         anti-joins. Run when the delete set grows past broadcast size."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         ddirs = self._main_head(entries, name).get("delete_dirs") or []
         if not ddirs:
             return {"table": name, "delete_dirs_removed": 0}
@@ -1776,10 +1630,7 @@ class Catalog:
         merges into the table properties in the SAME commit — the
         transactional batch-id marker hook streaming sinks use.
         """
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         head = self._main_head(entries, name)
         have = {f["name"] for f in head["schema"]["fields"]}
         missing = [c for c in key_cols if c not in have]
@@ -1916,10 +1767,7 @@ class Catalog:
         two source rows is the Delta ``MERGE`` cardinality violation —
         nondeterministic which update wins).
         """
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         # ONE job serves the cardinality check, the source-side
         # row-count stat, AND the measured avg length of string/binary
         # key columns (same shuffle the old dup-only check paid; the
@@ -2024,26 +1872,10 @@ class Catalog:
             r["_cow_file"]
             for r in hits.select("_cow_file").distinct().collect()
         ]
-        live = head["data_dirs"]
-        touched = [
-            d
-            for d in live
-            if any(re.sub(r"^file:/+", "/", fp).startswith(self._dir_abs(h, d))
-                   for fp in hit_files)
-        ]
-        kept = [d for d in live if d not in touched]
-        if touched:
-            in_touched = functools.reduce(
-                lambda a, b: a | b,
-                [
-                    F.regexp_replace(F.col("_cow_file"), "^file:/+", "/")
-                    .startswith(self._dir_abs(h, d))
-                    for d in touched
-                ],
-            )
-            touched_rows = tgt.filter(in_touched).drop("_cow_file")
-        else:
-            touched_rows = tgt.filter(F.lit(False)).drop("_cow_file")
+        touched, kept, in_touched = self._touched_dirs(
+            h, head["data_dirs"], hit_files
+        )
+        touched_rows = tgt.filter(in_touched).drop("_cow_file")
 
         # explicit presence markers: key columns may legally be NULL
         # (eqNullSafe join), so side presence can't be inferred from
@@ -2157,10 +1989,7 @@ class Catalog:
         reclaim dirs a clone still references — same as Delta shallow
         clones (VACUUM on the source breaks them). Re-materialize with
         `compact(clone)` to cut the dependency."""
-        src_h = self._handle(source)
-        entries = self._load_manifest(src_h)
-        if not entries:
-            raise ValueError(f"table {source} does not exist")
+        src_h, entries = self._entries(source)
         if self.table_exists(target):
             raise ValueError(f"table {target} already exists")
         base = (
@@ -2182,60 +2011,61 @@ class Catalog:
                 k: we.get(k)
                 for k in ("schema", "written_fields", "stats")
             }
-        with self._commit_lock(tgt):
-            os.makedirs(tgt.path, exist_ok=True)
-            self._save_manifest(
-                tgt,
-                [
-                    {
-                        "version": 0,
-                        "op": "clone",
-                        "cloned_from": f"{source}@v{base['version']}",
-                        "committed_at": time.strftime(
-                            "%Y-%m-%d %H:%M:%S", time.gmtime()
-                        ),
-                        "data_dirs": list(dir_meta),
-                        # equality deletes pin their coverage to a FIXED
-                        # dir list at clone time ("applies_to"): the
-                        # delete's seq lives in SOURCE version space
-                        # while clone-local appends number from 0, so a
-                        # cross-space strictly-lower comparison would
-                        # wrongly suppress rows appended to the clone
-                        # AFTER the delete. The applicable set — cloned
-                        # dirs with source seq below the delete's — is
-                        # closed at clone time and never grows.
-                        "delete_dirs": [
-                            self._clone_dd(d, rel, base, entries)
-                            for d in (base.get("delete_dirs") or [])
-                        ],
-                        "dir_meta": dir_meta,
-                        "schema": base["schema"],
-                        "partition_by": base.get("partition_by"),
-                        "partition_transforms": base.get(
-                            "partition_transforms"
-                        ),
-                        "properties": base.get("properties") or {},
-                        "stats": base.get("stats"),
-                    }
-                ],
-            )
-        return tgt
+        fields = {
+            "cloned_from": f"{source}@v{base['version']}",
+            "data_dirs": list(dir_meta),
+            # equality deletes pin their coverage to a FIXED dir list at
+            # clone time ("applies_to"): the delete's seq lives in SOURCE
+            # version space while clone-local appends number from 0, so
+            # a cross-space strictly-lower comparison would wrongly
+            # suppress rows appended to the clone AFTER the delete. The
+            # applicable set — cloned dirs with source seq below the
+            # delete's — is closed at clone time and never grows.
+            "delete_dirs": [
+                self._clone_dd(d, rel, base, entries)
+                for d in (base.get("delete_dirs") or [])
+            ],
+            "dir_meta": dir_meta,
+        }
+        # expected_version=0: the commit creates the target, and a
+        # concurrent create of the same name fails it
+        return self._meta_commit(
+            tgt, "clone", lambda _: (base, fields), expected_version=0
+        )
 
     @staticmethod
-    def _pin_eq_scope(rec: dict, snapshot_dirs) -> None:
-        """A NEW equality delete on a snapshot containing FOREIGN dirs
-        (clones: ``../src/vNNNNN``) cannot rely on the strictly-lower
-        sequence rule — those dirs decode in their SOURCE's version
-        space while this delete's seq is local, and a cross-space
-        comparison silently mis-scopes. Pin the coverage to the exact
-        pre-delete snapshot instead (``applies_to`` — semantically
-        identical: every current dir IS pre-delete, every later commit
-        is post-delete). All-local snapshots keep the O(1)-per-record
-        seq comparison."""
+    def _eq_delete_record(
+        edir: str, cols: list[str], base: dict | None, seq: int
+    ) -> dict:
+        """The delete_dirs record of a NEW equality delete in ``edir``
+        on snapshot ``base``: key columns, their stable field ids (in
+        ``cols`` order, so reads resolve them through renames) and the
+        sequence number.
+
+        A snapshot containing FOREIGN dirs (clones: ``../src/vNNNNN``)
+        cannot rely on the strictly-lower sequence rule — those dirs
+        decode in their SOURCE's version space while this delete's seq
+        is local, and a cross-space comparison silently mis-scopes. The
+        coverage is then pinned to the exact pre-delete snapshot
+        (``applies_to`` — semantically identical: every current dir IS
+        pre-delete, every later commit is post-delete). All-local
+        snapshots keep the O(1)-per-record seq comparison."""
+        fids = {
+            f["name"]: (f.get("metadata") or {}).get("field_id")
+            for f in (base["schema"]["fields"] if base else [])
+        }
+        rec = {
+            "dir": edir,
+            "cols": list(cols),
+            "field_ids": [fids.get(c) for c in cols],
+            "seq": seq,
+        }
+        dirs = list(base["data_dirs"]) if base else []
         # {5,}: version 100000 renders as 'v100000' (6 digits) and must
         # still classify as local, matching _dir_seq's int parse
-        if any(not re.fullmatch(r"v\d{5,}", d) for d in snapshot_dirs):
-            rec["applies_to"] = list(snapshot_dirs)
+        if any(not re.fullmatch(r"v\d{5,}", d) for d in dirs):
+            rec["applies_to"] = dirs
+        return rec
 
     def _clone_dd(self, d, rel: str, base: dict, entries: list[dict]):
         """Rebase one delete_dirs entry for a clone. Strings (positional
@@ -2283,37 +2113,17 @@ class Catalog:
         data (and delete) dirs — history stays linear, the audit trail
         of the undone commits is preserved, and time travel to them
         still works. Zero data movement: only the manifest flips."""
-        h = self._handle(name)
-        with self._commit_lock(h):
-            entries = self._load_manifest(h)
-            if not entries:
-                raise ValueError(f"table {name} does not exist")
+
+        def change(entries):
             target = entries[version]
             if target.get("expired"):
                 raise ValueError(
                     f"version {version} of {name} has been expired; "
                     "cannot roll back to it"
                 )
-            entries.append(
-                {
-                    "version": len(entries),
-                    "op": "rollback",
-                    "committed_at": time.strftime(
-                        "%Y-%m-%d %H:%M:%S", time.gmtime()
-                    ),
-                    "data_dirs": list(target["data_dirs"]),
-                    "delete_dirs": list(target.get("delete_dirs") or []),
-                    "schema": target["schema"],
-                    "partition_by": target.get("partition_by"),
-                    "partition_transforms": target.get(
-                        "partition_transforms"
-                    ),
-                    "properties": target.get("properties") or {},
-                    "stats": target.get("stats"),
-                }
-            )
-            self._save_manifest(h, entries)
-        return h
+            return target, {}
+
+        return self._meta_commit(self._handle(name), "rollback", change)
 
     def remove_orphan_files(
         self,
@@ -2337,11 +2147,8 @@ class Catalog:
         race). ``dry_run`` lists without deleting."""
         import shutil
 
-        h = self._handle(name)
-        with self._commit_lock(h):
-            entries = self._load_manifest(h)
-            if not entries:
-                raise ValueError(f"table {name} does not exist")
+        with self._commit_lock(self._handle(name)):
+            h, entries = self._entries(name)
             referenced: set[str] = set()
             for e in entries:
                 for d in e.get("data_dirs") or []:
@@ -2450,10 +2257,7 @@ class Catalog:
         each action carries its reason and, when executed, the
         underlying op's report.
         """
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         head = self._main_head(entries, name)
         # byte sizes straight from the filesystem walk: the compaction
         # decision needs no parquet footers and no Spark job (files()
@@ -2667,63 +2471,64 @@ class Catalog:
 
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
-        # retention contracts: tagged snapshots and live branch entries
-        # stay readable (and keep their dirs) regardless of keep_last —
-        # drop the tag/branch to release them
-        protected = set(self._load_tags(h).values())
-        protected |= {
-            e["version"]
-            for e in entries
-            if e.get("branch") and not e.get("branch_dropped")
-        }
-        # the retention window counts MAIN-lineage snapshots, not raw
-        # manifest positions: branch commits land at the tail, so
-        # entries[-keep_last:] could be entirely branch entries and the
-        # still-live main head would be expired out from under default
-        # reads. The main head is always retained by construction
-        # (it is the last element of main_entries).
-        main_entries = [e for e in entries if "branch" not in e]
-        retained_versions = {
-            e["version"] for e in main_entries[-keep_last:]
-        } | protected
-        if older_than is not None:
-            retained_versions |= {
+        # under the commit lock: a commit landing between the manifest
+        # load and the save would lose its entry, and its fresh dir
+        # (unreferenced by the stale manifest) would be deleted
+        with self._commit_lock(self._handle(name)):
+            h, entries = self._entries(name)
+            # retention contracts: tagged snapshots and live branch entries
+            # stay readable (and keep their dirs) regardless of keep_last —
+            # drop the tag/branch to release them
+            protected = set(self._load_tags(h).values())
+            protected |= {
                 e["version"]
-                for e in main_entries
-                if e["committed_at"] >= older_than
+                for e in entries
+                if e.get("branch") and not e.get("branch_dropped")
             }
-        retained = [entries[v] for v in sorted(retained_versions)]
-        keep_dirs = {d for e in retained for d in e["data_dirs"]}
-        keep_dirs |= {
-            self._dd_name(d)
-            for e in retained
-            for d in (e.get("delete_dirs") or [])
-        }
-        expired_versions = 0
-        for e in entries:
-            if e["version"] in retained_versions:
-                continue
-            if not e.get("expired"):
-                e["expired"] = True
-                expired_versions += 1
-        bytes_reclaimed = 0
-        dirs_deleted = 0
-        for d in sorted(os.listdir(h.path)):
-            full = os.path.join(h.path, d)
-            if not os.path.isdir(full) or d in keep_dirs:
-                continue
-            bytes_reclaimed += sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(full)
-                for f in fs
-            )
-            shutil.rmtree(full)
-            dirs_deleted += 1
-        self._save_manifest(h, entries)
+            # the retention window counts MAIN-lineage snapshots, not raw
+            # manifest positions: branch commits land at the tail, so
+            # entries[-keep_last:] could be entirely branch entries and the
+            # still-live main head would be expired out from under default
+            # reads. The main head is always retained by construction
+            # (it is the last element of main_entries).
+            main_entries = [e for e in entries if "branch" not in e]
+            retained_versions = {
+                e["version"] for e in main_entries[-keep_last:]
+            } | protected
+            if older_than is not None:
+                retained_versions |= {
+                    e["version"]
+                    for e in main_entries
+                    if e["committed_at"] >= older_than
+                }
+            retained = [entries[v] for v in sorted(retained_versions)]
+            keep_dirs = {d for e in retained for d in e["data_dirs"]}
+            keep_dirs |= {
+                self._dd_name(d)
+                for e in retained
+                for d in (e.get("delete_dirs") or [])
+            }
+            expired_versions = 0
+            for e in entries:
+                if e["version"] in retained_versions:
+                    continue
+                if not e.get("expired"):
+                    e["expired"] = True
+                    expired_versions += 1
+            bytes_reclaimed = 0
+            dirs_deleted = 0
+            for d in sorted(os.listdir(h.path)):
+                full = os.path.join(h.path, d)
+                if not os.path.isdir(full) or d in keep_dirs:
+                    continue
+                bytes_reclaimed += sum(
+                    os.path.getsize(os.path.join(dp, f))
+                    for dp, _, fs in os.walk(full)
+                    for f in fs
+                )
+                shutil.rmtree(full)
+                dirs_deleted += 1
+            self._save_manifest(h, entries)
         return {
             "table": name,
             "versions_expired": expired_versions,
@@ -2772,10 +2577,7 @@ class Catalog:
         row with ``col = value`` (up to bloom false positives, which
         only KEEP extra dirs, never skip live ones).
         """
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         if sum(x is not None for x in (version, tag, branch)) > 1:
             raise ValueError("version=, tag= and branch= are mutually exclusive")
         if tag is not None:
@@ -3226,10 +3028,7 @@ class Catalog:
         one-day delete feeds a one-day diff. Multiset semantics
         (exceptAll, not except) keep duplicate rows honest.
         """
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         fe = entries[from_version]
         te = (
             entries[to_version]
@@ -3378,9 +3177,7 @@ class Catalog:
 
     def table_properties(self, name: str) -> dict:
         """Latest-version table properties (TBLPROPERTIES analog)."""
-        entries = self._load_manifest(self._handle(name))
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        _, entries = self._entries(name)
         return dict(self._main_head(entries, name).get("properties") or {})
 
     def current_version(self, name: str) -> int:
@@ -3391,9 +3188,7 @@ class Catalog:
 
     def describe(self, name: str) -> list[dict]:
         """DESCRIBE: (col_name, data_type, comment) rows (S3 analog)."""
-        entries = self._load_manifest(self._handle(name))
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        _, entries = self._entries(name)
         return [
             {
                 "col_name": f["name"],
@@ -3430,10 +3225,7 @@ class Catalog:
         compaction decisions read (small-file counts, rows per file)."""
         import pyarrow.parquet as pq
 
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         entry = (
             entries[version]
             if version is not None
@@ -3467,10 +3259,7 @@ class Catalog:
         committed before stats existed."""
         import pyarrow.parquet as pq
 
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         entry = (
             entries[version]
             if version is not None
@@ -3570,10 +3359,7 @@ class Catalog:
         manifest — version-pinned like Iceberg's StatisticsFile, so
         time travel never serves stats from a different snapshot.
         """
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         head = self._main_head(entries, name)
         df = self.read(name)
         schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -3614,10 +3400,7 @@ class Catalog:
                     None if avg_len is None else round(float(avg_len), 2)
                 )
             stats["columns"][c] = entry
-        tmp = self._stats_path(h, head["version"]) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(stats, f, indent=1)
-        os.replace(tmp, self._stats_path(h, head["version"]))
+        _write_json(self._stats_path(h, head["version"]), stats)
         return stats
 
     def column_stats(
@@ -3626,20 +3409,13 @@ class Catalog:
         """Stats recorded for a snapshot (default: the main head), or
         ``None`` if that exact snapshot was never analyzed — stale
         stats are never silently served for a different version."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         v = (
             version
             if version is not None
             else self._main_head(entries, name)["version"]
         )
-        path = self._stats_path(h, v)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
+        return _read_json(self._stats_path(h, v), None)
 
     def show_stats(self, name: str) -> DataFrame:
         """``SHOW STATS FOR <table>`` rendering (Trino shape): one row
@@ -3695,10 +3471,7 @@ class Catalog:
         OVER-estimate (suppressed rows still count) — safe for the one
         consumer that matters, broadcast-side selection: an
         overestimate can only withhold a broadcast, never OOM one."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         head = self._main_head(entries, name)
         rows = 0
         for d in head["data_dirs"]:
@@ -3722,10 +3495,7 @@ class Catalog:
         :meth:`estimated_size_bytes`, exposed for callers that already
         hold an EXACT row count (e.g. a change-feed group set counted
         by the refresh that derives it)."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         head = self._main_head(entries, name)
         sidecar = self.column_stats(name)
         side_cols = (sidecar or {}).get("columns", {})
@@ -3776,10 +3546,7 @@ class Catalog:
         NEW merge-on-read delete files: their images feed the diff
         from dirs both versions share, which this dir-level estimate
         cannot bound."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         if not 0 <= from_version < len(entries) or (
             to_version is not None and not 0 <= to_version < len(entries)
         ):
@@ -3829,10 +3596,7 @@ class Catalog:
         current version was analyzed. Surfaced by the SQL front-end's
         EXPLAIN so a user sees WHICH predicate columns the manifest
         can skip on before paying for a scan."""
-        h = self._handle(name)
-        entries = self._load_manifest(h)
-        if not entries:
-            raise ValueError(f"table {name} does not exist")
+        h, entries = self._entries(name)
         head = self._main_head(entries, name)
         dirs = head["data_dirs"]
         if not dirs:
@@ -3867,10 +3631,7 @@ class Catalog:
 
     def views(self) -> dict[str, str]:
         """Defined view name → SQL text, in definition order."""
-        if not os.path.exists(self._views_path()):
-            return {}
-        with open(self._views_path()) as f:
-            return json.load(f)
+        return _read_json(self._views_path(), {})
 
     def create_view(self, name: str, sql_text: str, *, replace: bool = False) -> None:
         """CREATE [OR REPLACE] VIEW: a named SQL definition over catalog
@@ -3884,20 +3645,14 @@ class Catalog:
         if name in views and not replace:
             raise ValueError(f"view {name} already exists")
         views[name] = sql_text
-        tmp = self._views_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(views, f, indent=1)
-        os.replace(tmp, self._views_path())
+        _write_json(self._views_path(), views)
 
     def drop_view(self, name: str) -> None:
         views = self.views()
         if name not in views:
             raise ValueError(f"view {name} does not exist")
         del views[name]
-        tmp = self._views_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(views, f, indent=1)
-        os.replace(tmp, self._views_path())
+        _write_json(self._views_path(), views)
 
     def read_view(self, name: str) -> DataFrame:
         """Resolve a view against the current snapshots."""
@@ -3953,16 +3708,10 @@ class Catalog:
         return os.path.join(self.root, "_matviews.json")
 
     def materialized_views(self) -> dict[str, dict]:
-        if not os.path.exists(self._matviews_path()):
-            return {}
-        with open(self._matviews_path()) as f:
-            return json.load(f)
+        return _read_json(self._matviews_path(), {})
 
     def _save_matviews(self, mvs: dict[str, dict]) -> None:
-        tmp = self._matviews_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(mvs, f, indent=1)
-        os.replace(tmp, self._matviews_path())
+        _write_json(self._matviews_path(), mvs)
 
     def _matview_maintainer(self, name: str):
         from data_lakehouse_spark.plans.cdc import (

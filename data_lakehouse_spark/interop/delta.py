@@ -88,10 +88,7 @@ def export_delta(
     zero-copy-referenced files."""
     import pyarrow.parquet as pq
 
-    h = catalog._handle(name)
-    entries = catalog._load_manifest(h)
-    if not entries:
-        raise ValueError(f"table {name} does not exist")
+    h, entries = catalog._entries(name)
     head = catalog._main_head(entries, name)
     pos_dirs, eq_recs = catalog._dd_split(head.get("delete_dirs") or [])
     has_deletes = bool(pos_dirs) or bool(eq_recs)
@@ -466,10 +463,7 @@ def export_delta_history(
     partition-spec change. Non-identity (hidden-transform)
     partitioning is refused for the same reason as the current-snapshot
     path. Expired catalog versions are skipped (files reclaimed)."""
-    h = catalog._handle(name)
-    entries = catalog._load_manifest(h)
-    if not entries:
-        raise ValueError(f"table {name} does not exist")
+    h, entries = catalog._entries(name)
     versions = [
         e
         for e in entries

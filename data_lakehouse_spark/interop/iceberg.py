@@ -397,10 +397,7 @@ def export_iceberg(
     """
     import pyarrow.parquet as pq
 
-    h = catalog._handle(name)
-    entries = catalog._load_manifest(h)
-    if not entries:
-        raise ValueError(f"table {name} does not exist")
+    h, entries = catalog._entries(name)
     head = catalog._main_head(entries, name)
     pos_dd = [d for d in (head.get("delete_dirs") or []) if isinstance(d, str)]
     eq_dd = [d for d in (head.get("delete_dirs") or []) if isinstance(d, dict)]
@@ -859,10 +856,7 @@ def export_iceberg_history(catalog, name: str, dest: str) -> dict:
     single-writer layout doesn't need locally, noted for scale)."""
     import pyarrow.parquet as pq
 
-    h = catalog._handle(name)
-    entries = catalog._load_manifest(h)
-    if not entries:
-        raise ValueError(f"table {name} does not exist")
+    h, entries = catalog._entries(name)
     versions = [
         e
         for e in entries

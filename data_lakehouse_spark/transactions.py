@@ -50,6 +50,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from data_lakehouse_spark.catalog import _write_json
+
 __all__ = ["Transaction", "recover_transactions"]
 
 
@@ -57,32 +59,14 @@ def _txn_dir(catalog) -> str:
     return os.path.join(catalog.root, "_txn")
 
 
-def _publish_entry(target: dict, version: int, txn_id: str) -> dict:
-    """The manifest entry that makes ``target`` current (shape-identical
-    to Catalog.publish, plus the transaction id for audit)."""
-    return {
-        "version": version,
-        "op": "publish",
-        "txn_id": txn_id,
-        "committed_at": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
-        "data_dirs": list(target["data_dirs"]),
-        "delete_dirs": list(target.get("delete_dirs") or []),
-        "schema": target["schema"],
-        "partition_by": target.get("partition_by"),
-        "partition_transforms": target.get("partition_transforms"),
-        "properties": target.get("properties") or {},
-        "stats": target.get("stats"),
-    }
-
-
-def _roll_forward(catalog, table: str, staged_version: int, txn_id: str) -> bool:
+def _roll_forward(catalog, table: str, staged_version: int, txn_id: str) -> None:
     """Publish ``table``'s staged snapshot at ``staged_version`` unless
     an unstaged main-lineage entry already landed after it (the flip —
-    or a competing write — already happened). Returns True if this call
-    performed the flip."""
-    h = catalog._handle(table)
-    with catalog._commit_lock(h):
-        entries = catalog._load_manifest(h)
+    or a competing write — already happened). The publish entry is
+    shape-identical to Catalog.publish, plus the transaction id for
+    audit."""
+
+    def change(entries):
         if staged_version >= len(entries):
             raise ValueError(
                 f"transaction {txn_id}: {table} has no version "
@@ -96,10 +80,10 @@ def _roll_forward(catalog, table: str, staged_version: int, txn_id: str) -> bool
             )
         for e in entries[staged_version + 1:]:
             if "branch" not in e and not e.get("staged"):
-                return False  # already published (this txn or superseded)
-        entries.append(_publish_entry(target, len(entries), txn_id))
-        catalog._save_manifest(h, entries)
-        return True
+                return None  # already published (this txn or superseded)
+        return target, {"txn_id": txn_id}
+
+    catalog._meta_commit(catalog._handle(table), "publish", change)
 
 
 class Transaction:
@@ -188,20 +172,11 @@ class Transaction:
             "decided_at": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
             "tables": {n: v for n, (v, _) in self._staged.items()},
         }
-        tmp = intent_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, intent_path)  # <- the transaction commits HERE
-        # fsync the _txn directory: without it the rename's directory
-        # entry isn't power-loss durable, so a flipped manifest could
-        # survive a crash while the decided intent vanished — torn
-        # cross-table state recovery can't see. (Manifest flips are
-        # made durable symmetrically in Catalog._save_manifest.)
-        from data_lakehouse_spark.catalog import _fsync_dir
-
-        _fsync_dir(_txn_dir(self.catalog))
+        # the transaction commits HERE. The write is power-loss durable
+        # (file and _txn dir fsynced), like every manifest flip: a
+        # flipped manifest surviving a crash while the decided intent
+        # vanished would be torn cross-table state recovery can't see.
+        _write_json(intent_path, payload)
         for name in sorted(self._staged):
             _roll_forward(
                 self.catalog, name, self._staged[name][0], self.txn_id
