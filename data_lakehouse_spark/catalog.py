@@ -37,11 +37,14 @@ from __future__ import annotations
 import contextlib
 import functools
 import json
+import operator
 import os
 import re
 import threading
 import time
 from dataclasses import dataclass
+from typing import NamedTuple
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,6 +107,100 @@ def _read_json(path: str, default):
         return default
     with open(path) as f:
         return json.load(f)
+
+
+# -- snapshot files and their paths -----------------------------------------
+#
+# The on-disk layout decides which parquet files make up a snapshot and
+# how Spark names them; the exporters and the streaming source resolve
+# files through these session-free helpers, never by walking or parsing
+# paths themselves.
+
+
+class SnapshotFile(NamedTuple):
+    dir: str  # the snapshot dir, as the manifest names it
+    path: str  # absolute, normalized local path
+    bytes: int
+    partition: dict  # hive partition values; None for a null partition
+
+
+def _partition_values(rel_dir: str, part_cols) -> dict:
+    """Hive partition values of the ``col=value`` segments of
+    ``rel_dir``: percent-decoded, ``None`` for Hive's null-partition
+    directory, restricted to ``part_cols`` (every segment when
+    ``None``)."""
+    out: dict[str, str | None] = {}
+    for seg in rel_dir.split(os.sep):
+        k, eq, v = seg.partition("=")
+        if eq and (part_cols is None or k in part_cols):
+            out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    return out
+
+
+def snapshot_files(table_path: str, dirs, part_cols=None) -> list[SnapshotFile]:
+    """The parquet files of snapshot ``dirs`` (relative to
+    ``table_path``; cloned dirs start with ``..``), dir by dir in the
+    given order, with their byte sizes and the partition values of
+    their directory below the snapshot dir (see
+    :func:`_partition_values`). Reads no footers.
+
+    Within a dir, sub-dirs come in ``os.walk`` order and files sorted.
+    The streaming source's offsets count files in this order (``file:
+    k`` = the first k files of a version), so it must not change."""
+    out = []
+    for d in dirs:
+        root = os.path.abspath(os.path.join(table_path, d))
+        for dp, _, fs in os.walk(root):
+            pvals = _partition_values(os.path.relpath(dp, root), part_cols)
+            for fname in sorted(fs):
+                if fname.endswith(".parquet"):
+                    full = os.path.join(dp, fname)
+                    out.append(
+                        SnapshotFile(d, full, os.path.getsize(full), dict(pvals))
+                    )
+    return out
+
+
+def _tree_bytes(path: str) -> tuple[int, float]:
+    """(bytes of every file under ``path``, newest file mtime — the
+    dir's own mtime when it holds no file)."""
+    sts = [os.stat(os.path.join(dp, f)) for dp, _, fs in os.walk(path) for f in fs]
+    return sum(s.st_size for s in sts), max(
+        (s.st_mtime for s in sts), default=os.path.getmtime(path)
+    )
+
+
+def _local_path(p: str) -> str:
+    """Local path of a file as table metadata names it: a plain path or
+    a ``file:`` path that is NOT percent-encoded (Iceberg manifests and
+    position deletes), normalized."""
+    return os.path.normpath(re.sub(r"^file:/+", "/", p))
+
+
+def _uri_path(uri: str) -> str:
+    """Local path of a percent-encoded file URI: Spark's
+    ``_metadata.file_path`` (``file:/w/a%20b/…``, as positional deletes
+    store it) or a Delta log path. A root containing a space or ``%``
+    only matches a listed file after decoding."""
+    return _local_path(unquote(uri))
+
+
+def _spark_uri(path: str) -> str:
+    """Local ``path`` as Spark reports it in ``_metadata.file_path``:
+    ``file:`` plus Hadoop's percent-encoded path URI. Comparing the raw
+    column against this needs no per-row decode."""
+    from pyspark import SparkContext
+
+    jpath = SparkContext._jvm.org.apache.hadoop.fs.Path(os.path.abspath(path))
+    return "file:" + jpath.toUri().toString()
+
+
+def _in_dirs(col: str, dirs):
+    """Column: true where file column ``col`` (Spark's
+    ``_metadata.file_path``) lies under one of the local ``dirs`` —
+    the equality-delete read path runs this on every scan."""
+    conds = [F.col(col).startswith(_spark_uri(d) + "/") for d in dirs]
+    return functools.reduce(operator.or_, conds) if conds else F.lit(False)
 
 
 #: what a metadata-only commit carries from its base snapshot unless
@@ -774,7 +871,7 @@ class Catalog:
                 "partition_by": pb,
                 "partition_transforms": pb_spec,
                 "properties": properties or (prev.get("properties") if prev else {}),
-                "stats": self._dir_stats(data_dir),
+                "stats": self._dir_stats(h.path, os.path.basename(data_dir)),
                 **({"staged": True} if staged else {}),
                 **({"branch": branch} if branch else {}),
             }
@@ -905,7 +1002,7 @@ class Catalog:
         return {c: list(row[c]) for c in values}
 
     @staticmethod
-    def _dir_stats(data_dir: str) -> dict:
+    def _dir_stats(table_path: str, d: str) -> dict:
         """Per-directory column min/max/null-count aggregated from the
         parquet FOOTERS of the just-written files (metadata-only reads,
         no data scan) — the Iceberg manifest-metrics analog. Powers
@@ -918,42 +1015,39 @@ class Catalog:
         maxs: dict = {}
         nulls: dict = {}
         rows = 0
-        for dp, _, fs in os.walk(data_dir):
-            for fname in fs:
-                if not fname.endswith(".parquet"):
-                    continue
-                md = pq.read_metadata(os.path.join(dp, fname))
-                rows += md.num_rows
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        name = col.path_in_schema
-                        if "." in name:  # nested: skip
-                            continue
-                        st = col.statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        try:
-                            mn, mx = st.min, st.max
-                        except Exception:
-                            # pyarrow can't decode stats for every
-                            # physical type (e.g. some decimals):
-                            # missing stats only DISABLE pruning for
-                            # this column, never break the commit
-                            continue
-                        if isinstance(mn, bytes):
-                            continue  # undecoded binary stats: skip
-                        if not isinstance(
-                            mn, (int, float, str)
-                        ):  # timestamps/dates → ISO strings
-                            mn, mx = str(mn), str(mx)
-                        prev_mn = mins.get(name)
-                        mins[name] = mn if prev_mn is None else min(prev_mn, mn)
-                        prev_mx = maxs.get(name)
-                        maxs[name] = mx if prev_mx is None else max(prev_mx, mx)
-                        if st.has_null_count:
-                            nulls[name] = nulls.get(name, 0) + st.null_count
+        for f in snapshot_files(table_path, [d]):
+            md = pq.read_metadata(f.path)
+            rows += md.num_rows
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                for ci in range(g.num_columns):
+                    col = g.column(ci)
+                    name = col.path_in_schema
+                    if "." in name:  # nested: skip
+                        continue
+                    st = col.statistics
+                    if st is None or not st.has_min_max:
+                        continue
+                    try:
+                        mn, mx = st.min, st.max
+                    except Exception:
+                        # pyarrow can't decode stats for every
+                        # physical type (e.g. some decimals):
+                        # missing stats only DISABLE pruning for
+                        # this column, never break the commit
+                        continue
+                    if isinstance(mn, bytes):
+                        continue  # undecoded binary stats: skip
+                    if not isinstance(
+                        mn, (int, float, str)
+                    ):  # timestamps/dates → ISO strings
+                        mn, mx = str(mn), str(mx)
+                    prev_mn = mins.get(name)
+                    mins[name] = mn if prev_mn is None else min(prev_mn, mn)
+                    prev_mx = maxs.get(name)
+                    maxs[name] = mx if prev_mx is None else max(prev_mx, mx)
+                    if st.has_null_count:
+                        nulls[name] = nulls.get(name, 0) + st.null_count
         return {
             "rows": rows,
             "min": mins,
@@ -1288,47 +1382,33 @@ class Catalog:
         return {
             "table": name,
             "files_before": files_before,
-            "files_after": len(
-                self.read(name).inputFiles()
-            ) - sum(
-                1
-                for d in kept
-                for dp, _, fs in os.walk(
-                    os.path.normpath(os.path.join(h.path, d))
-                )
-                for f in fs
-                if f.endswith(".parquet")
-            ),
+            "files_after": len(self.read(name).inputFiles())
+            - len(snapshot_files(h.path, kept)),
             "bytes": bytes_touched,
             "rewritten_dirs": touched,
             "kept_dirs": kept,
         }
 
-    def _dir_abs(self, h: TableHandle, d: str) -> str:
-        """Normalized absolute path of a snapshot dir (foreign cloned
-        dirs carry ``../`` segments that never appear in the RESOLVED
-        file paths Spark reports, so containment checks must compare
-        normalized absolutes — a raw substring test silently misses
-        cloned dirs and would make COW DML no-op on their rows)."""
-        return os.path.normpath(os.path.join(h.path, d)) + os.sep
-
     def _touched_dirs(self, h: TableHandle, live: list[str], hit_files):
         """Split snapshot dirs ``live`` by the data files holding matching
         rows (``_cow_file`` lineage values) → ``(touched, kept,
         in_touched)``: the dirs to rewrite, the dirs to carry forward
-        unmodified, and a Column that is true for rows of a touched dir."""
+        unmodified, and a Column that is true for rows of a touched dir.
+        Dirs compare as normalized absolutes: cloned dirs carry ``../``
+        segments that the file paths Spark reports never show."""
+        hits = [_uri_path(fp) for fp in hit_files]
         touched = [
             d
             for d in live
-            if any(re.sub(r"^file:/+", "/", fp).startswith(self._dir_abs(h, d))
-                   for fp in hit_files)
+            if any(
+                fp.startswith(os.path.abspath(os.path.join(h.path, d)) + os.sep)
+                for fp in hits
+            )
         ]
         kept = [d for d in live if d not in touched]
-        file_path = F.regexp_replace(F.col("_cow_file"), "^file:/+", "/")
-        in_touched = functools.reduce(
-            lambda a, b: a | b,
-            [file_path.startswith(self._dir_abs(h, d)) for d in touched],
-        ) if touched else F.lit(False)
+        in_touched = _in_dirs(
+            "_cow_file", [os.path.join(h.path, d) for d in touched]
+        )
         return touched, kept, in_touched
 
     def _cow_rewrite(
@@ -2168,21 +2248,10 @@ class Catalog:
                     continue  # manifest/tags/lock files
                 if os.path.normpath(full) in referenced:
                     continue
-                newest = max(
-                    (
-                        os.path.getmtime(os.path.join(dp, f))
-                        for dp, _, fs in os.walk(full)
-                        for f in fs
-                    ),
-                    default=os.path.getmtime(full),
-                )
+                size, newest = _tree_bytes(full)
                 if newest > cutoff:
                     continue
-                bytes_total += sum(
-                    os.path.getsize(os.path.join(dp, f))
-                    for dp, _, fs in os.walk(full)
-                    for f in fs
-                )
+                bytes_total += size
                 orphans.append(d)
                 if not dry_run:
                     shutil.rmtree(full)
@@ -2263,15 +2332,7 @@ class Catalog:
         # decision needs no parquet footers and no Spark job (files()
         # reads num_rows per footer — O(files) I/O a per-tick sweep
         # must not pay)
-        sizes = [
-            os.path.getsize(os.path.join(dp, f))
-            for d in head["data_dirs"]
-            for dp, _, fs in os.walk(
-                os.path.normpath(os.path.join(h.path, d))
-            )
-            for f in fs
-            if f.endswith(".parquet")
-        ]
+        sizes = [f.bytes for f in snapshot_files(h.path, head["data_dirs"])]
         n_files = len(sizes)
         n_small = sum(1 for b in sizes if b < target_file_bytes // 2)
         n_deletes = len(head.get("delete_dirs") or [])
@@ -2521,11 +2582,7 @@ class Catalog:
                 full = os.path.join(h.path, d)
                 if not os.path.isdir(full) or d in keep_dirs:
                     continue
-                bytes_reclaimed += sum(
-                    os.path.getsize(os.path.join(dp, f))
-                    for dp, _, fs in os.walk(full)
-                    for f in fs
-                )
+                bytes_reclaimed += _tree_bytes(full)[0]
                 shutil.rmtree(full)
                 dirs_deleted += 1
             self._save_manifest(h, entries)
@@ -2718,17 +2775,10 @@ class Catalog:
         per dir stamp — committed dirs never change, and the read path
         sizes its broadcast hints from every delete dir on every read
         (compaction sizes its output from the data dirs)."""
-        path = os.path.normpath(os.path.join(h.path, d))
-
-        def walk() -> int:
-            return sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-
-        return self._dir_cached(h, d, ("bytes",), walk)
+        return self._dir_cached(
+            h, d, ("bytes",),
+            lambda: sum(f.bytes for f in snapshot_files(h.path, [d])),
+        )
 
     def _dir_cached(self, h: TableHandle, d: str, variant: tuple, build):
         """``build()`` for snapshot dir ``d`` of table ``h``, resolved
@@ -2796,11 +2846,7 @@ class Catalog:
         ap = rec.get("applies_to")
         if ap is None:
             return F.col("_eq_seq") < F.lit(int(rec["seq"]))
-        cond = F.lit(False)
-        for d in ap:
-            full = os.path.normpath(os.path.join(h.path, d)) + "/"
-            cond = cond | F.col("_file").contains(full)
-        return cond
+        return _in_dirs("_file", [os.path.join(h.path, d) for d in ap])
 
     def _with_dir_seq(
         self, h: TableHandle, entries: list[dict], df: DataFrame, dirs
@@ -2832,8 +2878,7 @@ class Catalog:
         ).cast("bigint")
         seq_expr = None
         for d in dirs:
-            full = os.path.normpath(os.path.join(h.path, d)) + "/"
-            hit = F.col("_file").contains(full)
+            hit = _in_dirs("_file", [os.path.join(h.path, d)])
             s = F.lit(self._dir_seq(entries, d)).cast("bigint")
             seq_expr = (
                 F.when(hit, s) if seq_expr is None else seq_expr.when(hit, s)
@@ -2849,6 +2894,8 @@ class Catalog:
         null-safe on the CURRENT column names (resolved by stable field
         id through renames). Row scoping (sequence rule / clone
         coverage) is composed separately via :meth:`_eq_scope`."""
+        import pyarrow.parquet as pq
+
         cur_by_id = {
             (f.get("metadata") or {}).get("field_id"): f["name"]
             for f in entry["schema"]["fields"]
@@ -2859,16 +2906,21 @@ class Catalog:
             cur_by_id.get(fid, c) if fid is not None else c
             for c, fid in zip(old_cols, fids)
         ]
-        dels = self._dir_cached(
-            h,
-            rec["dir"],
-            ("eq", tuple(old_cols)),
-            lambda: self.spark.read.parquet(
-                os.path.join(h.path, rec["dir"])
-            ).select(
+
+        def build() -> DataFrame:
+            # Spark records its schema in every parquet footer it
+            # writes; reading with it skips the schema-inference job
+            reader = self.spark.read
+            files = snapshot_files(h.path, [rec["dir"]])
+            footer = (pq.read_metadata(files[0].path).metadata or {}) if files else {}
+            spark_schema = footer.get(b"org.apache.spark.sql.parquet.row.metadata")
+            if spark_schema:
+                reader = reader.schema(StructType.fromJson(json.loads(spark_schema)))
+            return reader.parquet(os.path.join(h.path, rec["dir"])).select(
                 *[F.col(c).alias(f"_eqk_{i}") for i, c in enumerate(old_cols)]
-            ),
-        )
+            )
+
+        dels = self._dir_cached(h, rec["dir"], ("eq", tuple(old_cols)), build)
         cond = F.lit(True)
         for i, c in enumerate(now_cols):
             cond = cond & F.col(c).eqNullSafe(F.col(f"_eqk_{i}"))
@@ -2890,6 +2942,17 @@ class Catalog:
             for d in ddirs
         ]
         return functools.reduce(lambda a, b: a.union(b), parts)
+
+    def _positions_by_file(
+        self, h: TableHandle, ddirs: list[str]
+    ) -> dict[str, set[int]]:
+        """Deleted row indexes per data file (normalized local path) of
+        positional-delete dirs ``ddirs``, grouped on the driver — callers
+        gate this on the dirs' bytes (see :meth:`_broadcast_threshold`)."""
+        out: dict[str, set[int]] = {}
+        for r in self._read_positions(h, ddirs).collect():
+            out.setdefault(_uri_path(r["_file"]), set()).add(int(r["_pos"]))
+        return out
 
     def _project_dirs(
         self,
@@ -3231,22 +3294,15 @@ class Catalog:
             if version is not None
             else self._main_head(entries, name)
         )
-        rows = []
-        for d in entry["data_dirs"]:
-            root = os.path.join(h.path, d)
-            for dp, _, fs in os.walk(root):
-                for fname in sorted(fs):
-                    if not fname.endswith(".parquet"):
-                        continue
-                    full = os.path.join(dp, fname)
-                    rows.append(
-                        (
-                            d,
-                            os.path.relpath(full, h.path),
-                            os.path.getsize(full),
-                            pq.read_metadata(full).num_rows,
-                        )
-                    )
+        rows = [
+            (
+                f.dir,
+                os.path.relpath(f.path, h.path),
+                f.bytes,
+                pq.read_metadata(f.path).num_rows,
+            )
+            for f in snapshot_files(h.path, entry["data_dirs"])
+        ]
         return self.spark.createDataFrame(
             rows, "snapshot_dir string, file string, bytes bigint, rows bigint"
         )
@@ -3271,13 +3327,10 @@ class Catalog:
             if stats and "rows" in stats:
                 total += stats["rows"]
                 continue
-            root = os.path.join(h.path, d)
-            for dp, _, fs in os.walk(root):
-                for fname in fs:
-                    if fname.endswith(".parquet"):
-                        total += pq.read_metadata(
-                            os.path.join(dp, fname)
-                        ).num_rows
+            total += sum(
+                pq.read_metadata(f.path).num_rows
+                for f in snapshot_files(h.path, [d])
+            )
         pos_dirs, eq_recs = self._dd_split(entry.get("delete_dirs") or [])
         if eq_recs:
             # EQUALITY deletes suppress by key, not by position — the
@@ -3296,14 +3349,10 @@ class Catalog:
             # This one case reads the (small, broadcast-sized by the
             # MOR contract) delete files' file column instead of being
             # purely footer-metadata.
-            live = [self._dir_abs(h, d) for d in entry["data_dirs"]]
-            pos = self._read_positions(h, pos_dirs)
+            live = [os.path.join(h.path, d) for d in entry["data_dirs"]]
             if live:
-                norm = F.regexp_replace(F.col("_file"), "^file:/+", "/")
-                cond = functools.reduce(
-                    lambda a, b: a | b, [norm.startswith(p) for p in live]
-                )
-                total -= pos.filter(cond).count()
+                pos = self._read_positions(h, pos_dirs)
+                total -= pos.filter(_in_dirs("_file", live)).count()
         return total
 
     def partitions(self, name: str, *, version: int | None = None) -> DataFrame:
@@ -3312,32 +3361,26 @@ class Catalog:
         the hive-style ``col=value`` path segments of the live files —
         footer metadata only, no data scan. Unpartitioned tables (or
         dirs written before a partition-spec change) report under the
-        empty partition ``{}``, so mixed-layout tables stay honest."""
-        import json as _json
-        from urllib.parse import unquote
+        empty partition ``{}``, so mixed-layout tables stay honest. A
+        null partition value reports as JSON ``null``."""
+        import pyarrow.parquet as pq
 
-        files = self.files(name, version=version).collect()
-        agg: dict[str, list[int]] = {}
-        for r in files:
-            parts = {}
-            for seg in r["file"].split(os.sep):
-                if "=" in seg and not seg.endswith(".parquet"):
-                    k, _, v = seg.partition("=")
-                    parts[k] = unquote(v)
-            key = _json.dumps(parts, sort_keys=True)
-            cur = agg.setdefault(key, [0, 0, 0])
-            cur[0] += 1
-            cur[1] += r["rows"]
-            cur[2] += r["bytes"]
-        rows = [
-            (k, v[0], v[1], v[2]) for k, v in sorted(agg.items())
-        ]
-        schema = (
-            "partition string, n_files bigint, rows bigint, bytes bigint"
+        h, entries = self._entries(name)
+        entry = (
+            entries[version]
+            if version is not None
+            else self._main_head(entries, name)
         )
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(rows, schema)
+        agg: dict[str, list[int]] = {}
+        for f in snapshot_files(h.path, entry["data_dirs"]):
+            cur = agg.setdefault(json.dumps(f.partition, sort_keys=True), [0, 0, 0])
+            cur[0] += 1
+            cur[1] += pq.read_metadata(f.path).num_rows
+            cur[2] += f.bytes
+        return self.spark.createDataFrame(
+            [(k, *v) for k, v in sorted(agg.items())],
+            "partition string, n_files bigint, rows bigint, bytes bigint",
+        )
 
     # -- column statistics (ANALYZE TABLE) ---------------------------------
     def _stats_path(self, h: TableHandle, version: int) -> str:

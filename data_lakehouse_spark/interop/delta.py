@@ -6,13 +6,18 @@ commits (public protocol: https://github.com/delta-io/delta/blob/master/PROTOCOL
 no Avro, no manifest indirection — which makes export a pure-JSON
 metadata write and the reader a log replay:
 
-- :func:`export_delta` writes ``_delta_log/…0.json`` with
-  protocol/metaData/add actions for the catalog table's current
-  snapshot. Zero-copy by default (``add.path`` may be absolute per the
-  protocol); identity-hive-partitioned tables stay zero-copy because
-  Delta restores partition column values from ``add.partitionValues``
+- :func:`export_delta` and :func:`export_delta_history` share one log
+  writer, :func:`_write_log`: one Delta commit per catalog snapshot,
+  holding protocol/metaData (when they change) and the add/remove diff
+  against the previous snapshot. The current-snapshot export is the
+  one-version case. Zero-copy by default (``add.path`` may be absolute
+  per the protocol; it is a URI, so a ``%`` is written as ``%25``);
+  identity-hive-partitioned tables stay zero-copy because Delta
+  restores partition column values from ``add.partitionValues``
   (unlike the Iceberg export, which must materialize those). MOR
-  deletes and transform-partitioned layouts materialize.
+  positional deletes export as deletion vectors; equality deletes and
+  transform-partitioned layouts materialize (current snapshot) or
+  refuse (history).
 - :func:`read_delta` replays a Delta log — latest checkpoint parquet
   (if any) plus later JSON commits, add/remove reconciliation,
   partition-value reconstruction, schema from the last ``metaData``,
@@ -32,12 +37,13 @@ import json
 import os
 import re
 import time
-import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from data_lakehouse_spark.catalog import _spark_uri, _uri_path, snapshot_files
 
 __all__ = ["export_delta", "export_delta_history", "read_delta"]
 
@@ -58,6 +64,27 @@ def _schema_string(catalog_schema: dict) -> str:
     return json.dumps({"type": "struct", "fields": fields})
 
 
+def _pos_dirs(catalog, versions: list[dict]) -> list[str]:
+    """Every positional-delete dir the snapshots reference, once."""
+    return sorted(
+        {
+            d
+            for e in versions
+            for d in catalog._dd_split(e.get("delete_dirs") or [])[0]
+        }
+    )
+
+
+def _pos_fits_driver(catalog, h, versions: list[dict]) -> tuple[int, bool]:
+    """(bytes of the snapshots' positional-delete dirs, whether they fit
+    the broadcast threshold). The DV encode groups that whole set on
+    the driver (one sidecar per file) — bounded only while it stays
+    broadcast-sized, the same gate the MOR read path uses before
+    flipping to a shuffled anti-join."""
+    pos_bytes = sum(catalog._dir_bytes(h, d) for d in _pos_dirs(catalog, versions))
+    return pos_bytes, pos_bytes <= catalog._broadcast_threshold()
+
+
 def export_delta(
     catalog,
     name: str,
@@ -76,7 +103,8 @@ def export_delta(
     the ``deletionVectors`` protocol bump — O(deleted rows) metadata,
     no data rewrite. Auto-materializes (one Spark rewrite into
     ``dest/data/``) only when DVs can't express the snapshot: EQUALITY
-    delete files (row indexes would need a scan to resolve) or
+    delete files (row indexes would need a scan to resolve), a
+    positional-delete set past the broadcast threshold, or
     non-identity (transform) partitioning; identity hive partitioning
     exports zero-copy with per-file ``partitionValues`` parsed from
     the directory layout. ``deletion_vectors=False`` restores the
@@ -86,8 +114,6 @@ def export_delta(
     Same freshness caveat as the Iceberg export: the log references a
     frozen snapshot, and ``expire_snapshots`` on the source can reclaim
     zero-copy-referenced files."""
-    import pyarrow.parquet as pq
-
     h, entries = catalog._entries(name)
     head = catalog._main_head(entries, name)
     pos_dirs, eq_recs = catalog._dd_split(head.get("delete_dirs") or [])
@@ -98,17 +124,9 @@ def export_delta(
     # declared schema column; hidden transform columns (days(ts),
     # bucket(n, col)) are derived and NOT restorable from the path
     identity_part = all(c in schema_fields for c in pb)
-    # the DV encode groups the full positional-delete set on the driver
-    # (one sidecar per file) — bounded only while the accumulated
-    # delete dirs stay broadcast-sized (the same threshold the MOR read
-    # path uses before flipping to a shuffled anti-join). Past it, an
-    # un-folded CDC stream's delete set could OOM the driver: fall back
-    # to materialize instead.
-    pos_bytes = (
-        sum(catalog._dir_bytes(h, d) for d in pos_dirs)
-        if pos_dirs else 0
-    )
-    pos_fits_driver = pos_bytes <= catalog._broadcast_threshold()
+    # past the driver gate, an un-folded CDC stream's delete set could
+    # OOM the driver: fall back to materialize instead
+    pos_bytes, pos_fits_driver = _pos_fits_driver(catalog, h, [head])
     dv_eligible = (
         deletion_vectors
         and bool(pos_dirs)
@@ -139,96 +157,146 @@ def export_delta(
                if pb and not identity_part else "")
             + "pass materialize=True (one rewrite into the export)"
         )
-    use_dvs = dv_eligible and not materialize
 
     dest = os.path.abspath(dest)
-    log_dir = os.path.join(dest, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-
-    part_cols = [] if materialize else pb
     if materialize:
+        # the rewritten snapshot: one unpartitioned dir, no deletes
         data_dir = os.path.join(dest, "data")
         catalog.read(name).write.mode("overwrite").parquet(data_dir)
-        roots = [data_dir]
-    else:
-        roots = [
-            os.path.normpath(os.path.join(h.path, d))
-            for d in head["data_dirs"]
-        ]
+        head = {**head, "data_dirs": [data_dir], "delete_dirs": []}
+        pb = []
+    live, live_dv = _write_log(
+        catalog, h, name, dest, [head], pb, checkpoint_interval=None
+    )
+    return {
+        "table": name,
+        "location": dest,
+        "data_files": len(live),
+        # logical row count: physical rows minus DV-suppressed ones
+        "rows": sum(json.loads(a["stats"])["numRecords"] for a in live.values())
+        - sum(len(s) for s in live_dv.values()),
+        "materialized": bool(materialize),
+        "deletion_vector_files": len(live_dv),
+        "partition_columns": pb,
+    }
 
-    now_ms = int(time.time() * 1000)
-    # positional deletes → per-file deletion vectors: the delete files
-    # are (file path, row index) pairs, broadcast-sized by the MOR
-    # contract — group driver-side, one spec-format sidecar per file
-    dv_by_file: dict = {}
-    if use_dvs:
-        for r in catalog._read_positions(h, pos_dirs).collect():
-            # same normalization as the walk-side lookup below —
-            # asymmetry here would silently resurrect deleted rows
-            p = os.path.normpath(
-                re.sub(
-                    r"^file:/+", "/", urllib.parse.unquote(r["_file"])
-                )
-            )
-            dv_by_file.setdefault(p, []).append(int(r["_pos"]))
-    dv_attached: set = set()
 
-    adds = []
-    total_rows = 0
-    dv_files = 0
-    dv_rows = 0
-    for root in roots:
-        for dp, _, fs in os.walk(root):
-            for fname in sorted(fs):
-                if not fname.endswith(".parquet"):
-                    continue
-                full = os.path.join(dp, fname)
-                rel_dirs = os.path.relpath(dp, root)
-                pvals: dict[str, str] = {}
-                for comp in rel_dirs.split(os.sep):
-                    if "=" in comp:
-                        k, v = comp.split("=", 1)
-                        if k in part_cols:
-                            # protocol: a null partition value is JSON
-                            # null, not Hive's sentinel directory name
-                            pvals[k] = (
-                                None
-                                if v == "__HIVE_DEFAULT_PARTITION__"
-                                else urllib.parse.unquote(v)
-                            )
-                n_rows = pq.read_metadata(full).num_rows
-                total_rows += n_rows
-                add = {
-                    "path": full,  # absolute: allowed by protocol
-                    "partitionValues": pvals,
-                    "size": os.path.getsize(full),
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "stats": json.dumps({"numRecords": n_rows}),
-                }
-                norm_full = os.path.normpath(full)
-                killed = dv_by_file.get(norm_full)
-                if killed:
-                    from data_lakehouse_spark.interop.dv import attach_dv
+def export_delta_history(
+    catalog,
+    name: str,
+    dest: str,
+    *,
+    checkpoint_interval: int | None = 10,
+) -> dict:
+    """Export EVERY published main-lineage snapshot of a catalog table
+    as one Delta table whose commit history mirrors the catalog's —
+    external time travel (``read_delta(..., version=k)`` / any Delta
+    reader's ``VERSION AS OF``) over the catalog's versions.
 
-                    add["deletionVector"] = attach_dv(
-                        dest, killed, storage="u", prefix="dv/"
-                    )
-                    dv_files += 1
-                    dv_rows += len(set(killed))
-                    dv_attached.add(norm_full)
-                adds.append({"add": add})
+    Zero-copy only: catalog version k becomes Delta commit k' (dense
+    renumbering over published versions) whose ``add``/``remove``
+    actions are the file-set diff against the previous snapshot —
+    exactly how a native Delta writer logs an append or rewrite.
+    Schema commits surface as metaData-only Delta commits, so pinned
+    reads see the schema as of that version. A classic checkpoint
+    parquet (+ ``_last_checkpoint``) is written every
+    ``checkpoint_interval`` commits and at the head, so replay cost for
+    latest-reads is O(commits since checkpoint), not O(history) — the
+    protocol's scale mechanism (reference stores genuine open-format
+    tables: spark/jobs/bronze_ingestion.py:94-121).
 
-    unconsumed = set(dv_by_file) - dv_attached
-    if unconsumed:
-        # positions referencing files the walk never saw would export
-        # their deleted rows back to life — fail loudly instead
+    MOR POSITIONAL deletes in history export as deletion-vector
+    commits: a ``delete_mor`` version becomes a remove + re-add of
+    each touched file carrying its CUMULATIVE DV sidecar (how a native
+    DV writer logs a delete), and the protocol carries the
+    ``deletionVectors`` feature from commit 0. Refused shapes (same
+    contract as
+    :func:`~data_lakehouse_spark.interop.iceberg.export_iceberg_history`):
+    EQUALITY delete files anywhere in history (row indexes would need
+    a scan per version to resolve — export the current snapshot with
+    :func:`export_delta`, ``materialize=True``, instead), a
+    positional-delete history past the broadcast threshold (the same
+    driver gate as :func:`export_delta`) or a partition-spec change.
+    Non-identity (hidden-transform) partitioning is refused for the
+    same reason as the current-snapshot path. Expired catalog versions
+    are skipped (files reclaimed)."""
+    h, entries = catalog._entries(name)
+    versions = [
+        e
+        for e in entries
+        if "branch" not in e and not e.get("staged") and not e.get("expired")
+    ]
+    if not versions:
+        raise ValueError(f"table {name} has no published snapshots")
+    if any(
+        catalog._dd_split(e.get("delete_dirs") or [])[1] for e in versions
+    ):
         raise ValueError(
-            f"export_delta {name}: {len(unconsumed)} positional-delete "
-            f"file reference(s) matched no walked data file (path "
-            f"rendering mismatch?): {sorted(unconsumed)[:3]}"
+            f"{name}: history export is zero-copy only and a version "
+            "carries equality-delete files; export the current snapshot "
+            "with materialize=True instead"
         )
+    specs = {tuple(e.get("partition_by") or []) for e in versions}
+    if len(specs) > 1:
+        raise ValueError(
+            f"{name}: partition spec changed across versions {specs}; "
+            "history export supports a constant spec"
+        )
+    part_cols = list(versions[-1].get("partition_by") or [])
+    schema_fields = {
+        f["name"] for f in versions[-1]["schema"]["fields"]
+    }
+    if not all(c in schema_fields for c in part_cols):
+        raise ValueError(
+            f"{name}: partitioning uses hidden transforms; history "
+            "export refused (values are not restorable from the path)"
+        )
+    dest = os.path.abspath(dest)
+    live, _ = _write_log(
+        catalog, h, name, dest, versions, part_cols, checkpoint_interval
+    )
+    return {
+        "table": name,
+        "location": dest,
+        "commits": len(versions),
+        "data_files": len(live),
+        "checkpoint": len(versions) - 1 if checkpoint_interval else None,
+        "partition_columns": part_cols,
+    }
 
+
+def _write_log(
+    catalog,
+    h,
+    name: str,
+    dest: str,
+    versions: list[dict],
+    part_cols: list[str],
+    checkpoint_interval: int | None,
+) -> tuple[dict[str, dict], dict[str, frozenset]]:
+    """Write one Delta commit per catalog snapshot in ``versions``
+    (zero-copy: ``add.path`` is each file's absolute in-place path) to
+    ``dest/_delta_log`` → the head's (live adds, DV row indexes) by
+    path. Positional deletes become per-file DV sidecars, refused past
+    the driver gate (:func:`_pos_fits_driver`). A checkpoint is written
+    every ``checkpoint_interval`` commits and at the head (never when
+    it is ``None``)."""
+    import pyarrow.parquet as pq
+
+    from data_lakehouse_spark.interop.dv import attach_dv
+
+    pos_bytes, pos_fits_driver = _pos_fits_driver(catalog, h, versions)
+    if not pos_fits_driver:
+        raise ValueError(
+            f"cannot zero-copy export {name}: its positional-delete set "
+            f"({pos_bytes} bytes) exceeds the broadcast threshold "
+            "(driver-side DV grouping would be unbounded — fold deletes "
+            "first via rewrite_position_deletes and expire the "
+            "snapshots that still carry them)"
+        )
+    log_dir = os.path.join(dest, "_delta_log")
+    os.makedirs(log_dir, exist_ok=True)
+    now_ms = int(time.time() * 1000)
     protocol = (
         {
             "minReaderVersion": 3,
@@ -236,94 +304,142 @@ def export_delta(
             "readerFeatures": ["deletionVectors"],
             "writerFeatures": ["deletionVectors"],
         }
-        if dv_files
+        if _pos_dirs(catalog, versions)
         else {"minReaderVersion": 1, "minWriterVersion": 2}
     )
-    actions = [
-        {"protocol": protocol},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": _schema_string(head["schema"]),
-                "partitionColumns": part_cols,
-                "configuration": {},
-                "createdTime": now_ms,
+    table_id = str(uuid.uuid4())
+    # dirs shared across versions are immutable: a file's row count and
+    # a delete dir's positions are read once for the whole log
+    n_rows: dict[str, int] = {}
+    positions: dict[str, dict[str, set[int]]] = {}
+
+    def _add(f) -> dict:
+        if f.path not in n_rows:
+            n_rows[f.path] = pq.read_metadata(f.path).num_rows
+        return {
+            # the protocol's path is a URI that readers decode: escaping
+            # '%' keeps a literal one (Spark's escaped partition dirs,
+            # s=10%3A00) intact; every other character is written as-is
+            "path": f.path.replace("%", "%25"),
+            "partitionValues": f.partition,
+            "size": f.bytes,
+            "modificationTime": now_ms,
+            "dataChange": True,
+            "stats": json.dumps({"numRecords": n_rows[f.path]}),
+        }
+
+    def _with_dv(a: dict, killed: frozenset) -> dict:
+        return dict(
+            a, deletionVector=attach_dv(dest, sorted(killed), storage="u", prefix="dv/")
+        )
+
+    live: dict[str, dict] = {}
+    live_dv: dict[str, frozenset] = {}  # current DV content per path
+    meta: dict | None = None
+    last_ckpt = -1
+    for k, entry in enumerate(versions):
+        cur = {
+            f.path: _add(f)
+            for f in snapshot_files(h.path, entry["data_dirs"], part_cols)
+        }
+        # cumulative deleted indexes per file AT this version
+        dv_now: dict[str, set] = {}
+        for d in catalog._dd_split(entry.get("delete_dirs") or [])[0]:
+            if d not in positions:
+                positions[d] = catalog._positions_by_file(h, [d])
+            for p, idxs in positions[d].items():
+                dv_now.setdefault(p, set()).update(idxs)
+        ghost = set(dv_now) - set(cur)
+        if ghost:
+            # a position referencing no snapshot file would silently
+            # resurrect its deleted rows in the export
+            raise ValueError(
+                f"export_delta {name}@v{entry['version']}: "
+                f"{len(ghost)} positional-delete file reference(s) "
+                f"matched no snapshot file (path rendering mismatch?): "
+                f"{sorted(ghost)[:3]}"
+            )
+        actions: list[dict] = []
+        if k == 0:
+            actions.append({"protocol": protocol})
+        new_meta = {
+            "id": table_id,
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": _schema_string(entry["schema"]),
+            "partitionColumns": part_cols,
+            "configuration": {},
+            "createdTime": now_ms,
+        }
+        if meta is None or new_meta["schemaString"] != meta["schemaString"]:
+            meta = new_meta
+            actions.append({"metaData": meta})
+
+        def _remove(p: str) -> dict:
+            # Spec action reconciliation keys add/remove on
+            # (path, deletionVector uniqueness), so a remove must carry
+            # the DV descriptor of the add it tombstones — a bare-path
+            # remove would leave a prior add{path, DV} live for a
+            # native reader (our own replayer keys by path alone and
+            # tolerates either form).
+            rm = {
+                "path": live[p]["path"],
+                "deletionTimestamp": now_ms,
+                "dataChange": True,
             }
-        },
-        *adds,
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {"mode": "ErrorIfExists"},
-                "engineInfo": f"data_lakehouse_spark export of {name}"
-                f"@v{head['version']}",
+            old_dv = live[p].get("deletionVector")
+            if old_dv:
+                rm["deletionVector"] = old_dv
+            return rm
+
+        for p in live:
+            if p not in cur:
+                actions.append({"remove": _remove(p)})
+        new_dv: dict[str, frozenset] = {}
+        for p, a in cur.items():
+            want = frozenset(dv_now.get(p, ()))
+            if want:
+                new_dv[p] = want
+            if p not in live:
+                if want:
+                    cur[p] = a = _with_dv(a, want)
+                actions.append({"add": a})
+            elif want != live_dv.get(p, frozenset()):
+                # DV content changed for a carried-forward file: log it
+                # the way a native DV writer does — remove (carrying
+                # the OLD descriptor) + re-add with the new cumulative
+                # sidecar
+                actions.append({"remove": _remove(p)})
+                if want:
+                    a = _with_dv(a, want)
+                cur[p] = a
+                actions.append({"add": a})
+            else:
+                # unchanged file keeps its existing descriptor (if any)
+                cur[p] = live[p]
+        live_dv = new_dv
+        actions.append(
+            {
+                "commitInfo": {
+                    "timestamp": now_ms,
+                    "operation": "WRITE",
+                    "engineInfo": f"data_lakehouse_spark export "
+                    f"of {name}@v{entry['version']}",
+                }
             }
-        },
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    return {
-        "table": name,
-        "location": dest,
-        "data_files": len(adds),
-        # logical row count: physical rows minus DV-suppressed ones
-        "rows": total_rows - dv_rows,
-        "materialized": bool(materialize),
-        "deletion_vector_files": dv_files,
-        "partition_columns": part_cols,
-    }
-
-
-# ---------------------------------------------------------------------------
-# history export
-# ---------------------------------------------------------------------------
-
-
-def _snapshot_files(h, entry, part_cols, footer_cache) -> list[dict]:
-    """One Delta ``add`` payload per parquet file of a catalog snapshot
-    (zero-copy: absolute in-place paths). ``footer_cache`` memoizes
-    footer reads by path — dirs shared across versions are immutable,
-    so a file's rowcount is read once for the whole history."""
-    import pyarrow.parquet as pq
-
-    adds = []
-    for d in entry["data_dirs"]:
-        root = os.path.normpath(os.path.join(h.path, d))
-        for dp, _, fs in os.walk(root):
-            for fname in sorted(fs):
-                if not fname.endswith(".parquet"):
-                    continue
-                full = os.path.join(dp, fname)
-                pvals: dict[str, str | None] = {}
-                for comp in os.path.relpath(dp, root).split(os.sep):
-                    if "=" in comp:
-                        k, v = comp.split("=", 1)
-                        if k in part_cols:
-                            pvals[k] = (
-                                None
-                                if v == "__HIVE_DEFAULT_PARTITION__"
-                                else urllib.parse.unquote(v)
-                            )
-                if full not in footer_cache:
-                    footer_cache[full] = (
-                        pq.read_metadata(full).num_rows,
-                        os.path.getsize(full),
-                    )
-                n_rows, size = footer_cache[full]
-                adds.append(
-                    {
-                        "path": full,
-                        "partitionValues": pvals,
-                        "size": size,
-                        "modificationTime": 0,
-                        "dataChange": True,
-                        "stats": json.dumps({"numRecords": n_rows}),
-                    }
-                )
-    return adds
+        )
+        with open(os.path.join(log_dir, f"{k:020d}.json"), "w") as f:
+            for a in actions:
+                f.write(json.dumps(a) + "\n")
+        live = cur
+        is_last = k == len(versions) - 1
+        if checkpoint_interval and (
+            is_last or (k - last_ckpt) >= checkpoint_interval
+        ):
+            _write_checkpoint(
+                catalog.spark, log_dir, k, protocol, meta, live
+            )
+            last_ckpt = k
+    return live, live_dv
 
 
 _CKPT_DDL = (
@@ -424,243 +540,6 @@ def _write_checkpoint(
     shutil.rmtree(tmp, ignore_errors=True)
     with open(os.path.join(log_dir, "_last_checkpoint"), "w") as f:
         json.dump({"version": version, "size": len(rows)}, f)
-
-
-def export_delta_history(
-    catalog,
-    name: str,
-    dest: str,
-    *,
-    checkpoint_interval: int | None = 10,
-) -> dict:
-    """Export EVERY published main-lineage snapshot of a catalog table
-    as one Delta table whose commit history mirrors the catalog's —
-    external time travel (``read_delta(..., version=k)`` / any Delta
-    reader's ``VERSION AS OF``) over the catalog's versions.
-
-    Zero-copy only: catalog version k becomes Delta commit k' (dense
-    renumbering over published versions) whose ``add``/``remove``
-    actions are the file-set diff against the previous snapshot —
-    exactly how a native Delta writer logs an append or rewrite.
-    Schema commits surface as metaData-only Delta commits, so pinned
-    reads see the schema as of that version. A classic checkpoint
-    parquet (+ ``_last_checkpoint``) is written every
-    ``checkpoint_interval`` commits and at the head, so replay cost for
-    latest-reads is O(commits since checkpoint), not O(history) — the
-    protocol's scale mechanism (reference stores genuine open-format
-    tables: spark/jobs/bronze_ingestion.py:94-121).
-
-    MOR POSITIONAL deletes in history export as deletion-vector
-    commits: a ``delete_mor`` version becomes a remove + re-add of
-    each touched file carrying its CUMULATIVE DV sidecar (how a native
-    DV writer logs a delete), and the protocol carries the
-    ``deletionVectors`` feature from commit 0. Refused shapes (same
-    contract as
-    :func:`~data_lakehouse_spark.interop.iceberg.export_iceberg_history`):
-    EQUALITY delete files anywhere in history (row indexes would need
-    a scan per version to resolve — export the current snapshot with
-    :func:`export_delta`, ``materialize=True``, instead) or a
-    partition-spec change. Non-identity (hidden-transform)
-    partitioning is refused for the same reason as the current-snapshot
-    path. Expired catalog versions are skipped (files reclaimed)."""
-    h, entries = catalog._entries(name)
-    versions = [
-        e
-        for e in entries
-        if "branch" not in e and not e.get("staged") and not e.get("expired")
-    ]
-    if not versions:
-        raise ValueError(f"table {name} has no published snapshots")
-    if any(
-        catalog._dd_split(e.get("delete_dirs") or [])[1] for e in versions
-    ):
-        raise ValueError(
-            f"{name}: history export is zero-copy only and a version "
-            "carries equality-delete files; export the current snapshot "
-            "with materialize=True instead"
-        )
-    any_dvs = any(
-        catalog._dd_split(e.get("delete_dirs") or [])[0] for e in versions
-    )
-    specs = {tuple(e.get("partition_by") or []) for e in versions}
-    if len(specs) > 1:
-        raise ValueError(
-            f"{name}: partition spec changed across versions {specs}; "
-            "history export supports a constant spec"
-        )
-    part_cols = list(versions[-1].get("partition_by") or [])
-    schema_fields = {
-        f["name"] for f in versions[-1]["schema"]["fields"]
-    }
-    if not all(c in schema_fields for c in part_cols):
-        raise ValueError(
-            f"{name}: partitioning uses hidden transforms; history "
-            "export refused (values are not restorable from the path)"
-        )
-
-    dest = os.path.abspath(dest)
-    log_dir = os.path.join(dest, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-
-    now_ms = int(time.time() * 1000)
-    protocol = (
-        {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": ["deletionVectors"],
-            "writerFeatures": ["deletionVectors"],
-        }
-        if any_dvs
-        else {"minReaderVersion": 1, "minWriterVersion": 2}
-    )
-    table_id = str(uuid.uuid4())
-    footer_cache: dict[str, tuple[int, int]] = {}
-    # per-delete-dir position map, read once across the whole export:
-    # {normalized file path: frozenset(row indexes)}
-    pos_cache: dict[str, dict[str, frozenset]] = {}
-
-    def _dir_positions(d: str) -> dict[str, frozenset]:
-        if d not in pos_cache:
-            by_file: dict[str, set] = {}
-            for r in catalog._read_positions(h, [d]).collect():
-                p = os.path.normpath(
-                    re.sub(
-                        r"^file:/+", "/", urllib.parse.unquote(r["_file"])
-                    )
-                )
-                by_file.setdefault(p, set()).add(int(r["_pos"]))
-            pos_cache[d] = {p: frozenset(s) for p, s in by_file.items()}
-        return pos_cache[d]
-
-    live: dict[str, dict] = {}
-    live_dv: dict[str, frozenset] = {}  # current DV content per path
-    meta: dict | None = None
-    last_ckpt = -1
-    for k, entry in enumerate(versions):
-        cur = {
-            a["path"]: a
-            for a in _snapshot_files(h, entry, part_cols, footer_cache)
-        }
-        # cumulative deleted indexes per file AT this version
-        dv_now: dict[str, set] = {}
-        for d in catalog._dd_split(entry.get("delete_dirs") or [])[0]:
-            for p, idxs in _dir_positions(d).items():
-                dv_now.setdefault(p, set()).update(idxs)
-        actions: list[dict] = []
-        if k == 0:
-            actions.append({"protocol": protocol})
-        new_meta = {
-            "id": table_id,
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": _schema_string(entry["schema"]),
-            "partitionColumns": part_cols,
-            "configuration": {},
-            "createdTime": now_ms,
-        }
-        if meta is None or new_meta["schemaString"] != meta["schemaString"]:
-            meta = new_meta
-            actions.append({"metaData": meta})
-        def _remove(p: str) -> dict:
-            # Spec action reconciliation keys add/remove on
-            # (path, deletionVector uniqueness), so a remove must carry
-            # the DV descriptor of the add it tombstones — a bare-path
-            # remove would leave a prior add{path, DV} live for a
-            # native reader (our own replayer keys by path alone and
-            # tolerates either form).
-            rm = {
-                "path": p,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-            old_dv = (live.get(p) or {}).get("deletionVector")
-            if old_dv:
-                rm["deletionVector"] = old_dv
-            return rm
-
-        for p in live:
-            if p not in cur:
-                actions.append({"remove": _remove(p)})
-        new_dv: dict[str, frozenset] = {}
-        for p, a in cur.items():
-            want = frozenset(dv_now.get(os.path.normpath(p), ()))
-            if want:
-                new_dv[p] = want
-            if p not in live:
-                if want:
-                    from data_lakehouse_spark.interop.dv import attach_dv
-
-                    a = dict(
-                        a,
-                        deletionVector=attach_dv(
-                            dest, sorted(want), storage="u", prefix="dv/"
-                        ),
-                    )
-                    cur[p] = a
-                actions.append({"add": a})
-            elif want != live_dv.get(p, frozenset()):
-                # DV content changed for a carried-forward file: log it
-                # the way a native DV writer does — remove (carrying
-                # the OLD descriptor) + re-add with the new cumulative
-                # sidecar
-                actions.append({"remove": _remove(p)})
-                if want:
-                    from data_lakehouse_spark.interop.dv import attach_dv
-
-                    a = dict(
-                        a,
-                        deletionVector=attach_dv(
-                            dest, sorted(want), storage="u", prefix="dv/"
-                        ),
-                    )
-                else:
-                    a = {k2: v2 for k2, v2 in a.items()
-                         if k2 != "deletionVector"}
-                cur[p] = a
-                actions.append({"add": dict(a, dataChange=True)})
-            else:
-                # unchanged file keeps its existing descriptor (if any)
-                cur[p] = live[p]
-        ghost = set(dv_now) - {os.path.normpath(p) for p in cur}
-        if ghost:
-            # a position referencing no snapshot file would silently
-            # resurrect its deleted rows in the export
-            raise ValueError(
-                f"export_delta_history {name}@v{entry['version']}: "
-                f"{len(ghost)} positional-delete file reference(s) "
-                f"matched no snapshot file (path rendering mismatch?): "
-                f"{sorted(ghost)[:3]}"
-            )
-        live_dv = new_dv
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "WRITE",
-                    "engineInfo": f"data_lakehouse_spark history export "
-                    f"of {name}@v{entry['version']}",
-                }
-            }
-        )
-        with open(os.path.join(log_dir, f"{k:020d}.json"), "w") as f:
-            for a in actions:
-                f.write(json.dumps(a) + "\n")
-        live = cur
-        is_last = k == len(versions) - 1
-        if checkpoint_interval and (
-            is_last or (k - last_ckpt) >= checkpoint_interval
-        ):
-            _write_checkpoint(
-                catalog.spark, log_dir, k, protocol, meta, live
-            )
-            last_ckpt = k
-    return {
-        "table": name,
-        "location": dest,
-        "commits": len(versions),
-        "data_files": len(live),
-        "checkpoint": last_ckpt if checkpoint_interval else None,
-        "partition_columns": part_cols,
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -907,17 +786,15 @@ def read_delta(
         return df.select(*keep, *extra)
 
     def _abs(p: str) -> str:
-        p = urllib.parse.unquote(p)
-        p = re.sub(r"^file:/+", "/", p)
-        return p if os.path.isabs(p) else os.path.join(location, p)
+        return os.path.join(location, _uri_path(p))
 
     # deletion vectors: decode each file's sidecar bitmap (driver-side
     # — DVs are metadata-sized, bounded by a file's row count) into
-    # (absolute file path, deleted row index) pairs; applied below as
-    # ONE broadcast anti-join on _metadata lineage, keeping the scan
-    # itself vectorized
+    # (file path as Spark reports it, deleted row index) pairs; applied
+    # below as ONE broadcast anti-join on _metadata lineage, keeping the
+    # scan itself vectorized
     dv_map = {
-        _abs(p): a["deletionVector"]
+        _spark_uri(_abs(p)): a["deletionVector"]
         for p, a in live.items()
         if a.get("deletionVector")
     }
@@ -938,22 +815,10 @@ def read_delta(
         dels = spark.createDataFrame(
             pairs, "__dv_kill_file string, __dv_kill_idx bigint"
         )
-        # _metadata.file_path is a Hadoop Path URI (scheme +
-        # percent-encoding) while the kill keys are decoded absolute
-        # paths (the same _abs() rendering the add actions resolve
-        # through) — decode the column side to match. Literal '+' is
-        # protected first: url_decode is form-decoding, which would
-        # turn it into a space.
-        col_path = F.url_decode(
-            F.regexp_replace(
-                F.regexp_replace(F.col("__dv_file"), r"^file:/+", "/"),
-                r"\+",
-                "%2B",
-            )
-        )
+        # the kill keys are rendered as Spark renders _metadata.file_path
         out = df.join(
             F.broadcast(dels),
-            (col_path == F.col("__dv_kill_file"))
+            (F.col("__dv_file") == F.col("__dv_kill_file"))
             & (F.col("__dv_idx") == F.col("__dv_kill_idx")),
             "left_anti",
         )

@@ -17,7 +17,11 @@ the interop gap:
   in place. Manifests are written with the Apache Avro JAVA library
   bundled with Spark (the same implementation Iceberg itself uses), so
   the container files are produced by the reference Avro writer, not a
-  home-grown encoder.
+  home-grown encoder. :func:`export_iceberg_history` writes every
+  published snapshot through the same snapshot writer
+  (:func:`_write_snapshot`: data manifest, delete manifest, manifest
+  list) and the same table-metadata writer; the data files of each
+  snapshot come from :func:`data_lakehouse_spark.catalog.snapshot_files`.
 - :func:`read_iceberg` reads an Iceberg table directory into a
   DataFrame using an INDEPENDENT pure-Python implementation of the
   spec (JSON metadata walk + a from-scratch Avro OCF decoder). Tests
@@ -39,12 +43,13 @@ import os
 import re
 import struct
 import time
-import urllib.parse
 import uuid
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from data_lakehouse_spark.catalog import _local_path, _spark_uri, snapshot_files
 
 __all__ = ["export_iceberg", "export_iceberg_history", "read_iceberg"]
 
@@ -395,8 +400,6 @@ def export_iceberg(
     embedded Iceberg ids (name mapping is the spec's mechanism for
     exactly this).
     """
-    import pyarrow.parquet as pq
-
     h, entries = catalog._entries(name)
     head = catalog._main_head(entries, name)
     pos_dd = [d for d in (head.get("delete_dirs") or []) if isinstance(d, str)]
@@ -465,117 +468,59 @@ def export_iceberg(
     export_pos = pos_dd if not materialize else []
 
     dest = os.path.abspath(dest)
-    meta_dir = os.path.join(dest, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-
+    os.makedirs(os.path.join(dest, "metadata"), exist_ok=True)
     part_cols = [] if materialize else pb
     field_ids = {f["name"]: f["id"] for f in schema["fields"]}
-    part_fields = [
-        {
-            "name": c,
-            "ice_type": ice_types[c],
-            "source-id": field_ids[c],
-            "field-id": 1000 + i,
-        }
-        for i, c in enumerate(part_cols)
-    ]
-
+    n_rows: dict[str, int] = {}
+    dirs = head["data_dirs"]
     if materialize:
-        data_dir = os.path.join(dest, "data")
-        catalog.read(name).write.mode("overwrite").parquet(data_dir)
-        roots = [(data_dir, 1)]
-    else:
-        # Iceberg sequence numbers are 1-based; catalog commit versions
-        # are 0-based — shift by one. Without equality deletes every
-        # file exports at seq 1 (the single-snapshot shape unchanged
-        # from before); with them the per-dir commit order is what the
-        # spec's strictly-lower rule reads, so it must ship.
-        roots = [
-            (
-                os.path.normpath(os.path.join(h.path, d)),
-                (catalog._dir_seq(entries, d) + 1) if export_eq else 1,
-            )
-            for d in head["data_dirs"]
-        ]
-
-    def _pval(col: str, raw: str):
-        if raw == "__HIVE_DEFAULT_PARTITION__":
-            return None
-        v = urllib.parse.unquote(raw)
-        return int(v) if ice_types[col] in ("int", "long") else v
-
-    data_files = []
-    for root, seq in roots:
-        for dp, _, fs in os.walk(root):
-            pvals: dict[str, object] = {}
-            if part_cols:
-                for comp in os.path.relpath(dp, root).split(os.sep):
-                    if "=" in comp:
-                        k, v = comp.split("=", 1)
-                        if k in part_cols:
-                            pvals[k] = _pval(k, v)
-            for fname in sorted(fs):
-                if fname.endswith(".parquet"):
-                    full = os.path.join(dp, fname)
-                    data_files.append(
-                        {
-                            "path": full,
-                            "bytes": os.path.getsize(full),
-                            "rows": pq.read_metadata(full).num_rows,
-                            "partition": dict(pvals),
-                            "seq": seq,
-                        }
-                    )
+        dirs = [os.path.join(dest, "data")]
+        catalog.read(name).write.mode("overwrite").parquet(dirs[0])
+    # Iceberg sequence numbers are 1-based; catalog commit versions are
+    # 0-based — shift by one. Without equality deletes every file
+    # exports at seq 1 (the single-snapshot shape); with them the
+    # per-dir commit order is what the spec's strictly-lower rule
+    # reads, so it must ship.
+    data_files = _data_files(
+        h, dirs, part_cols, ice_types, n_rows,
+        lambda d: (catalog._dir_seq(entries, d) + 1) if export_eq else 1,
+    )
 
     # equality delete files: the catalog's key parquet IS the spec's
     # content=2 wire shape; equality_ids come from the export schema's
     # field ids (stable across the catalog -> Iceberg id space)
     eq_files = []
     for rec in export_eq:
-        ids = [field_ids[c] for c in rec["cols"]]
-        droot = os.path.normpath(os.path.join(h.path, rec["dir"]))
-        for dp, _, fs in os.walk(droot):
-            for fname in sorted(fs):
-                if fname.endswith(".parquet"):
-                    full = os.path.join(dp, fname)
-                    eq_files.append(
-                        {
-                            "path": full,
-                            "bytes": os.path.getsize(full),
-                            "rows": pq.read_metadata(full).num_rows,
-                            "ids": ids,
-                            "seq": int(rec["seq"]) + 1,
-                        }
-                    )
+        for f in _data_files(
+            h, [rec["dir"]], [], ice_types, n_rows,
+            lambda d, s=int(rec["seq"]) + 1: s,
+        ):
+            eq_files.append({**f, "ids": [field_ids[c] for c in rec["cols"]]})
 
+    data_seq = max([f["seq"] for f in data_files] or [1])
     # positional deletes → ONE spec content=1 delete file under
     # dest/deletes/: (file_path, pos) sorted, with the spec's RESERVED
     # field ids (2147483546 / 2147483545) embedded so id-resolving
     # readers need no name mapping. The file_path rendering must equal
     # the manifest's data-file paths exactly — any reference that
-    # matches no walked file fails loudly (silent mismatch would
-    # resurrect deleted rows).
+    # matches no listed file fails loudly (silent mismatch would
+    # resurrect deleted rows). They reference exact (file_path, pos)
+    # pairs, so their sequence only needs to cover the referenced files
+    # (the spec applies them to data files with seq <= delete seq).
     pos_del_files = []
     if export_pos:
         import pyarrow as pa
         import pyarrow.parquet as papq
 
-        known = {os.path.normpath(f["path"]) for f in data_files}
-        pairs = []
-        for r in catalog._read_positions(h, export_pos).collect():
-            p = os.path.normpath(
-                re.sub(
-                    r"^file:/+", "/", urllib.parse.unquote(r["_file"])
-                )
+        by_file = catalog._positions_by_file(h, export_pos)
+        unknown = sorted(set(by_file) - {f["path"] for f in data_files})
+        if unknown:
+            raise ValueError(
+                f"export_iceberg {name}: positional-delete reference "
+                f"{unknown[0]} matched no listed data file (path rendering "
+                "mismatch?)"
             )
-            if p not in known:
-                raise ValueError(
-                    f"export_iceberg {name}: positional-delete reference "
-                    f"{p} matched no walked data file (path rendering "
-                    "mismatch?)"
-                )
-            pairs.append((p, int(r["_pos"])))
-        pairs = sorted(set(pairs))
+        pairs = sorted((p, i) for p, idxs in by_file.items() for i in idxs)
         del_dir = os.path.join(dest, "deletes")
         os.makedirs(del_dir, exist_ok=True)
         pos_path = os.path.join(
@@ -607,221 +552,38 @@ def export_iceberg(
                 "path": pos_path,
                 "bytes": os.path.getsize(pos_path),
                 "rows": len(pairs),
+                "seq": data_seq,
             }
         )
 
     snapshot_id = uuid.uuid4().int % ((1 << 62) - 1) + 1
-    now_ms = int(time.time() * 1000)
-    commit_uuid = str(uuid.uuid4())
-
-    manifest_path = os.path.join(meta_dir, f"{commit_uuid}-m0.avro")
-    entry_schema = (
-        _entry_schema_with_partition(part_fields)
-        if part_fields
-        else _MANIFEST_ENTRY_SCHEMA
-    )
-    spec_json = [
-        {
-            "name": pf["name"],
-            "transform": "identity",
-            "source-id": pf["source-id"],
-            "field-id": pf["field-id"],
-        }
-        for pf in part_fields
-    ]
-    entry_rows = [
-        {
-            "status": 1,  # ADDED
-            "snapshot_id": snapshot_id,
-            "sequence_number": f["seq"],
-            "file_sequence_number": f["seq"],
-            "data_file": {
-                "content": 0,
-                "file_path": f["path"],
-                "file_format": "PARQUET",
-                "partition": f["partition"] if part_fields else None,
-                "record_count": f["rows"],
-                "file_size_in_bytes": f["bytes"],
-            },
-        }
-        for f in data_files
-    ]
-    _write_avro(
-        catalog.spark,
-        manifest_path,
-        entry_schema,
-        entry_rows,
-        {
-            "schema": json.dumps(schema),
-            "schema-id": "0",
-            "partition-spec": json.dumps(spec_json),
-            "partition-spec-id": "0",
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-
-    data_seqs = [f["seq"] for f in data_files] or [1]
-    # position deletes reference exact (file_path, pos) pairs, so their
-    # sequence only needs to cover the referenced files (the spec
-    # applies them to data files with seq <= delete seq)
-    for f in pos_del_files:
-        f["seq"] = max(data_seqs)
-    last_seq = max(
-        data_seqs + [f["seq"] for f in eq_files + pos_del_files]
-    )
+    del_files = eq_files + pos_del_files
+    part_fields = _part_fields(part_cols, schema)
     total_rows = sum(f["rows"] for f in data_files)
-    manifest_rows = [
+    snap = _write_snapshot(
+        catalog.spark, os.path.join(dest, "metadata"), snapshot_id, schema,
+        part_fields, data_files, del_files,
+        max([data_seq] + [f["seq"] for f in del_files]),
+    )
+    snap.update(
         {
-            "manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "content": 0,
-            "sequence_number": max(data_seqs),
-            "min_sequence_number": min(data_seqs),
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(data_files),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": total_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    # Equality deletes apply GLOBALLY only when their delete file sits
-    # in an UNPARTITIONED spec (Iceberg spec, "Scan Planning": a delete
-    # file in a partitioned spec applies only to its own partition).
-    # The catalog's eq-deletes are table-global, so on a partitioned
-    # export the delete manifest is written under an ADDED unpartitioned
-    # spec (spec-id 1) — writing it under spec 0 with null partition
-    # values would scope every delete to the null partition and
-    # external readers (Spark/Trino/PyIceberg) would silently
-    # resurrect the deleted rows.
-    all_del_files = eq_files + pos_del_files
-    del_spec_id = 1 if (all_del_files and part_fields) else 0
-    if all_del_files:
-        # DELETE manifest (manifest-list content=1): one content=2
-        # entry per equality delete file (with its equality_ids) and
-        # one content=1 entry per position delete file, each with its
-        # true sequence number
-        del_manifest_path = os.path.join(meta_dir, f"{commit_uuid}-m1.avro")
-        del_rows = [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": f["seq"],
-                "file_sequence_number": f["seq"],
-                "data_file": {
-                    "content": 2 if "ids" in f else 1,
-                    "file_path": f["path"],
-                    "file_format": "PARQUET",
-                    "partition": None,
-                    "record_count": f["rows"],
-                    "file_size_in_bytes": f["bytes"],
-                    "equality_ids": f.get("ids"),
-                },
-            }
-            for f in all_del_files
-        ]
-        _write_avro(
-            catalog.spark,
-            del_manifest_path,
-            # unpartitioned entry schema when the deletes ride spec 1:
-            # the r102 partition record is empty there by definition
-            _MANIFEST_ENTRY_SCHEMA if del_spec_id == 1 else entry_schema,
-            del_rows,
-            {
-                "schema": json.dumps(schema),
-                "schema-id": "0",
-                "partition-spec": json.dumps(
-                    [] if del_spec_id == 1 else spec_json
-                ),
-                "partition-spec-id": str(del_spec_id),
-                "format-version": "2",
-                "content": "deletes",
+            "timestamp-ms": int(time.time() * 1000),
+            "summary": {
+                "operation": "append",
+                "added-data-files": str(len(data_files)),
+                "added-records": str(total_rows),
             },
-        )
-        del_seqs = [f["seq"] for f in all_del_files]
-        manifest_rows.append(
-            {
-                "manifest_path": del_manifest_path,
-                "manifest_length": os.path.getsize(del_manifest_path),
-                "partition_spec_id": del_spec_id,
-                "content": 1,
-                "sequence_number": max(del_seqs),
-                "min_sequence_number": min(del_seqs),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(all_del_files),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(f["rows"] for f in all_del_files),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    list_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
+        }
     )
-    _write_avro(
-        catalog.spark,
-        list_path,
-        _MANIFEST_LIST_SCHEMA,
-        manifest_rows,
-        {"format-version": "2", "snapshot-id": str(snapshot_id)},
-    )
-
-    metadata = {
-        "format-version": 2,
-        "table-uuid": str(uuid.uuid4()),
-        "location": dest,
-        "last-sequence-number": last_seq,
-        "last-updated-ms": now_ms,
-        "last-column-id": last_col_id,
-        "current-schema-id": 0,
-        "schemas": [schema],
-        "default-spec-id": 0,
-        "partition-specs": (
-            [{"spec-id": 0, "fields": spec_json}]
-            + (
-                [{"spec-id": 1, "fields": []}]  # global eq-delete spec
-                if del_spec_id == 1
-                else []
-            )
-        ),
-        "last-partition-id": 999 + len(spec_json),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
+    _write_metadata(
+        dest, schema, last_col_id, part_fields, [snap],
+        {
             "schema.name-mapping.default": json.dumps(name_mapping),
             "exported-from": f"data_lakehouse_spark:{name}"
             f"@v{head['version']}",
         },
-        "current-snapshot-id": snapshot_id,
-        "refs": {"main": {"snapshot-id": snapshot_id, "type": "branch"}},
-        "snapshots": [
-            {
-                "snapshot-id": snapshot_id,
-                "sequence-number": last_seq,
-                "timestamp-ms": now_ms,
-                "summary": {
-                    "operation": "append",
-                    "added-data-files": str(len(data_files)),
-                    "added-records": str(total_rows),
-                },
-                "manifest-list": list_path,
-                "schema-id": 0,
-            }
-        ],
-        "snapshot-log": [
-            {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
-        ],
-        "metadata-log": [],
-    }
-    meta_file = os.path.join(meta_dir, "v1.metadata.json")
-    with open(meta_file, "w") as f:
-        json.dump(metadata, f, indent=1)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
-        f.write("1")
+        delete_spec=bool(del_files and part_fields),
+    )
     return {
         "table": name,
         "location": dest,
@@ -843,19 +605,20 @@ def export_iceberg_history(catalog, name: str, dest: str) -> dict:
     ``VERSION AS OF``).
 
     Zero-copy only: each catalog version becomes an Iceberg snapshot
-    whose manifest references that version's files in place, with
-    increasing sequence numbers and a monotone snapshot-log. Refused
-    shapes (export the current snapshot with :func:`export_iceberg`
-    instead): any version carrying MOR delete files, non-identity
-    partition values, or a partition-spec change across versions
-    (old dirs' layouts would parse wrong under the final spec).
-    Expired versions are skipped (their files are reclaimed).
+    written by the same manifest / manifest-list writer as
+    :func:`export_iceberg`, referencing that version's files in place,
+    with increasing sequence numbers and a monotone snapshot-log.
+    Refused shapes (export the current snapshot with
+    :func:`export_iceberg` instead): any version carrying MOR delete
+    files, non-identity partition values, or a partition-spec change
+    across versions (old dirs' layouts would parse wrong under the
+    final spec). Expired versions are skipped (their files are
+    reclaimed).
 
     Cost is O(total files across versions) metadata — shared dirs are
     re-listed per snapshot (manifest reuse is an optimization the
-    single-writer layout doesn't need locally, noted for scale)."""
-    import pyarrow.parquet as pq
-
+    single-writer layout doesn't need locally, noted for scale); each
+    file's footer is read once."""
     h, entries = catalog._entries(name)
     versions = [
         e
@@ -892,30 +655,7 @@ def export_iceberg_history(catalog, name: str, dest: str) -> dict:
             f"{name}: partition values are not identity-restorable; "
             "history export refused"
         )
-    field_ids = {f["name"]: f["id"] for f in schema["fields"]}
-    part_fields = [
-        {
-            "name": c,
-            "ice_type": ice_types[c],
-            "source-id": field_ids[c],
-            "field-id": 1000 + i,
-        }
-        for i, c in enumerate(pb)
-    ]
-    spec_json = [
-        {
-            "name": pf["name"],
-            "transform": "identity",
-            "source-id": pf["source-id"],
-            "field-id": pf["field-id"],
-        }
-        for pf in part_fields
-    ]
-    entry_schema = (
-        _entry_schema_with_partition(part_fields)
-        if part_fields
-        else _MANIFEST_ENTRY_SCHEMA
-    )
+    part_fields = _part_fields(pb, schema)
     # name mapping: every name each field id EVER had (renames resolve
     # old files under old names — multiple names per id is the spec's
     # mechanism)
@@ -935,149 +675,40 @@ def export_iceberg_history(catalog, name: str, dest: str) -> dict:
     dest = os.path.abspath(dest)
     meta_dir = os.path.join(dest, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
-
-    def _pval(col: str, raw: str):
-        if raw == "__HIVE_DEFAULT_PARTITION__":
-            return None
-        v = urllib.parse.unquote(raw)
-        return int(v) if ice_types[col] in ("int", "long") else v
-
     base_id = uuid.uuid4().int % ((1 << 53) - 1) + 1
     now_ms = int(time.time() * 1000)
-    snapshots = []
-    snapshot_log = []
+    n_rows: dict[str, int] = {}
+    snapshots: list[dict] = []
     for i, e in enumerate(versions):
-        files = []
-        for d in e["data_dirs"]:
-            root = os.path.normpath(os.path.join(h.path, d))
-            for dp, _, fs in os.walk(root):
-                pvals: dict[str, object] = {}
-                for comp in os.path.relpath(dp, root).split(os.sep):
-                    if "=" in comp:
-                        k, v = comp.split("=", 1)
-                        if k in pb:
-                            pvals[k] = _pval(k, v)
-                for fname in sorted(fs):
-                    if fname.endswith(".parquet"):
-                        full = os.path.join(dp, fname)
-                        files.append(
-                            {
-                                "path": full,
-                                "bytes": os.path.getsize(full),
-                                "rows": pq.read_metadata(full).num_rows,
-                                "partition": dict(pvals),
-                            }
-                        )
-        sid = base_id + e["version"]
         seq = i + 1
-        manifest_path = os.path.join(meta_dir, f"hist-{sid}-m0.avro")
-        _write_avro(
-            catalog.spark,
-            manifest_path,
-            entry_schema,
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": sid,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": f["path"],
-                        "file_format": "PARQUET",
-                        "partition": f["partition"] if part_fields else None,
-                        "record_count": f["rows"],
-                        "file_size_in_bytes": f["bytes"],
-                    },
-                }
-                for f in files
-            ],
-            {
-                "schema": json.dumps(schema),
-                "schema-id": "0",
-                "partition-spec": json.dumps(spec_json),
-                "partition-spec-id": "0",
-                "format-version": "2",
-                "content": "data",
-            },
+        files = _data_files(
+            h, e["data_dirs"], pb, ice_types, n_rows, lambda d, s=seq: s
         )
-        list_path = os.path.join(meta_dir, f"snap-{sid}-1-hist.avro")
-        total_rows = sum(f["rows"] for f in files)
-        _write_avro(
-            catalog.spark,
-            list_path,
-            _MANIFEST_LIST_SCHEMA,
-            [
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": 0,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": sid,
-                    "added_files_count": len(files),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": total_rows,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            ],
-            {"format-version": "2", "snapshot-id": str(sid)},
+        snap = _write_snapshot(
+            catalog.spark, meta_dir, base_id + e["version"], schema,
+            part_fields, files, [], seq,
         )
-        ts = now_ms + i  # strictly increasing snapshot-log
-        snapshots.append(
+        if snapshots:
+            snap["parent-snapshot-id"] = snapshots[-1]["snapshot-id"]
+        snap.update(
             {
-                "snapshot-id": sid,
-                **({"parent-snapshot-id": snapshots[-1]["snapshot-id"]}
-                   if snapshots else {}),
-                "sequence-number": seq,
-                "timestamp-ms": ts,
+                "timestamp-ms": now_ms + i,  # strictly increasing log
                 "summary": {
                     "operation": e.get("op", "append"),
-                    "total-records": str(total_rows),
+                    "total-records": str(sum(f["rows"] for f in files)),
                     "catalog-version": str(e["version"]),
                 },
-                "manifest-list": list_path,
-                "schema-id": 0,
             }
         )
-        snapshot_log.append({"snapshot-id": sid, "timestamp-ms": ts})
-
-    metadata = {
-        "format-version": 2,
-        "table-uuid": str(uuid.uuid4()),
-        "location": dest,
-        "last-sequence-number": len(snapshots),
-        "last-updated-ms": now_ms + len(snapshots),
-        "last-column-id": last_col_id,
-        "current-schema-id": 0,
-        "schemas": [schema],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_json}],
-        "last-partition-id": 999 + len(spec_json),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
+        snapshots.append(snap)
+    _write_metadata(
+        dest, schema, last_col_id, part_fields, snapshots,
+        {
             "schema.name-mapping.default": json.dumps(name_mapping),
             "exported-from": f"data_lakehouse_spark:{name} (full history)",
         },
-        "current-snapshot-id": snapshots[-1]["snapshot-id"],
-        "refs": {
-            "main": {
-                "snapshot-id": snapshots[-1]["snapshot-id"],
-                "type": "branch",
-            }
-        },
-        "snapshots": snapshots,
-        "snapshot-log": snapshot_log,
-        "metadata-log": [],
-    }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as f:
-        json.dump(metadata, f, indent=1)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
-        f.write("1")
+        delete_spec=False,
+    )
     return {
         "table": name,
         "location": dest,
@@ -1089,6 +720,231 @@ def export_iceberg_history(catalog, name: str, dest: str) -> dict:
             for v in versions
         ],
     }
+
+
+def _data_files(
+    h, dirs: list[str], part_cols: list[str], ice_types: dict, n_rows: dict,
+    seq_of,
+) -> list[dict]:
+    """Manifest rows of the parquet files of snapshot ``dirs``: path,
+    bytes, footer row count (memoized in ``n_rows`` — shared dirs are
+    immutable), identity partition values typed for the spec and the
+    file's sequence number ``seq_of(dir)``."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in snapshot_files(h.path, dirs, part_cols):
+        if f.path not in n_rows:
+            n_rows[f.path] = pq.read_metadata(f.path).num_rows
+        out.append(
+            {
+                "path": f.path,
+                "bytes": f.bytes,
+                "rows": n_rows[f.path],
+                "partition": {
+                    k: int(v)
+                    if v is not None and ice_types[k] in ("int", "long")
+                    else v
+                    for k, v in f.partition.items()
+                },
+                "seq": seq_of(f.dir),
+            }
+        )
+    return out
+
+
+def _write_snapshot(
+    spark: SparkSession,
+    meta_dir: str,
+    snapshot_id: int,
+    schema: dict,
+    part_fields: list[dict],
+    data_files: list[dict],
+    del_files: list[dict],
+    seq: int,
+) -> dict:
+    """Write snapshot ``snapshot_id``'s data manifest, delete manifest
+    (when ``del_files``) and manifest list → its ``snapshots`` entry
+    without timestamp and summary. ``data_files`` / ``del_files`` rows
+    carry path, bytes, rows, seq and, for data, the partition tuple;
+    equality deletes also carry their ``ids``. ``seq`` is the
+    snapshot's sequence number."""
+    commit_uuid = str(uuid.uuid4())
+    spec_json = _spec_json(part_fields)
+    entry_schema = (
+        _entry_schema_with_partition(part_fields)
+        if part_fields
+        else _MANIFEST_ENTRY_SCHEMA
+    )
+
+    def _entry(f: dict, content: int, partition) -> dict:
+        return {
+            "status": 1,  # ADDED
+            "snapshot_id": snapshot_id,
+            "sequence_number": f["seq"],
+            "file_sequence_number": f["seq"],
+            "data_file": {
+                "content": content,
+                "file_path": f["path"],
+                "file_format": "PARQUET",
+                "partition": partition,
+                "record_count": f["rows"],
+                "file_size_in_bytes": f["bytes"],
+                "equality_ids": f.get("ids"),
+            },
+        }
+
+    def _manifest(suffix: str, content: int, files, spec_id: int, rows) -> dict:
+        path = os.path.join(meta_dir, f"{commit_uuid}-{suffix}.avro")
+        _write_avro(
+            spark,
+            path,
+            entry_schema if spec_id == 0 else _MANIFEST_ENTRY_SCHEMA,
+            rows,
+            {
+                "schema": json.dumps(schema),
+                "schema-id": "0",
+                "partition-spec": json.dumps(spec_json if spec_id == 0 else []),
+                "partition-spec-id": str(spec_id),
+                "format-version": "2",
+                "content": "data" if content == 0 else "deletes",
+            },
+        )
+        seqs = [f["seq"] for f in files] or [seq]
+        return {
+            "manifest_path": path,
+            "manifest_length": os.path.getsize(path),
+            "partition_spec_id": spec_id,
+            "content": content,
+            "sequence_number": max(seqs),
+            "min_sequence_number": min(seqs),
+            "added_snapshot_id": snapshot_id,
+            "added_files_count": len(files),
+            "existing_files_count": 0,
+            "deleted_files_count": 0,
+            "added_rows_count": sum(f["rows"] for f in files),
+            "existing_rows_count": 0,
+            "deleted_rows_count": 0,
+        }
+
+    manifests = [
+        _manifest(
+            "m0", 0, data_files, 0,
+            [
+                _entry(f, 0, f["partition"] if part_fields else None)
+                for f in data_files
+            ],
+        )
+    ]
+    if del_files:
+        # DELETE manifest (manifest-list content=1): one content=2
+        # entry per equality delete file (with its equality_ids) and
+        # one content=1 entry per position delete file, each with its
+        # true sequence number. Equality deletes apply GLOBALLY only
+        # when their delete file sits in an UNPARTITIONED spec (Iceberg
+        # spec, "Scan Planning": a delete file in a partitioned spec
+        # applies only to its own partition). The catalog's eq-deletes
+        # are table-global, so on a partitioned export the delete
+        # manifest is written under an ADDED unpartitioned spec
+        # (spec-id 1) — writing it under spec 0 with null partition
+        # values would scope every delete to the null partition and
+        # external readers (Spark/Trino/PyIceberg) would silently
+        # resurrect the deleted rows.
+        manifests.append(
+            _manifest(
+                "m1", 1, del_files, 1 if part_fields else 0,
+                [_entry(f, 2 if "ids" in f else 1, None) for f in del_files],
+            )
+        )
+    list_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro")
+    _write_avro(
+        spark,
+        list_path,
+        _MANIFEST_LIST_SCHEMA,
+        manifests,
+        {"format-version": "2", "snapshot-id": str(snapshot_id)},
+    )
+    return {
+        "snapshot-id": snapshot_id,
+        "sequence-number": seq,
+        "manifest-list": list_path,
+        "schema-id": 0,
+    }
+
+
+def _write_metadata(
+    dest: str,
+    schema: dict,
+    last_col_id: int,
+    part_fields: list[dict],
+    snapshots: list[dict],
+    properties: dict,
+    *,
+    delete_spec: bool,
+) -> None:
+    """Write ``dest/metadata/v1.metadata.json`` (the HadoopTables
+    layout) over ``snapshots``, the last one current, plus
+    ``version-hint.text``. ``delete_spec`` adds the unpartitioned spec 1
+    that global equality deletes of a partitioned table ride."""
+    spec_json = _spec_json(part_fields)
+    head = snapshots[-1]
+    metadata = {
+        "format-version": 2,
+        "table-uuid": str(uuid.uuid4()),
+        "location": dest,
+        "last-sequence-number": max(s["sequence-number"] for s in snapshots),
+        "last-updated-ms": head["timestamp-ms"],
+        "last-column-id": last_col_id,
+        "current-schema-id": 0,
+        "schemas": [schema],
+        "default-spec-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": spec_json}]
+        + ([{"spec-id": 1, "fields": []}] if delete_spec else []),
+        "last-partition-id": 999 + len(spec_json),
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "properties": properties,
+        "current-snapshot-id": head["snapshot-id"],
+        "refs": {"main": {"snapshot-id": head["snapshot-id"], "type": "branch"}},
+        "snapshots": snapshots,
+        "snapshot-log": [
+            {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
+            for s in snapshots
+        ],
+        "metadata-log": [],
+    }
+    meta_dir = os.path.join(dest, "metadata")
+    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as f:
+        json.dump(metadata, f, indent=1)
+    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
+        f.write("1")
+
+
+def _part_fields(part_cols: list[str], schema: dict) -> list[dict]:
+    """Identity partition fields (spec field ids 1000+) over the
+    export schema's columns ``part_cols``."""
+    by_name = {f["name"]: f for f in schema["fields"]}
+    return [
+        {
+            "name": c,
+            "ice_type": by_name[c]["type"],
+            "source-id": by_name[c]["id"],
+            "field-id": 1000 + i,
+        }
+        for i, c in enumerate(part_cols)
+    ]
+
+
+def _spec_json(part_fields: list[dict]) -> list[dict]:
+    return [
+        {
+            "name": pf["name"],
+            "transform": "identity",
+            "source-id": pf["source-id"],
+            "field-id": pf["field-id"],
+        }
+        for pf in part_fields
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -1228,10 +1084,6 @@ def _read_avro_file(path: str) -> tuple[dict, list]:
 # ---------------------------------------------------------------------------
 
 
-def _strip_uri(p: str) -> str:
-    return re.sub(r"^file:/+", "/", p)
-
-
 def read_iceberg(
     spark: SparkSession, location: str, *, snapshot_id: int | None = None
 ) -> DataFrame:
@@ -1285,13 +1137,13 @@ def read_iceberg(
     )
     if snap is None:
         raise ValueError(f"{location}: snapshot {snap_id} not found")
-    _, manifests = _read_avro_file(_strip_uri(snap["manifest-list"]))
+    _, manifests = _read_avro_file(_local_path(snap["manifest-list"]))
     data_paths: list[tuple[str, dict]] = []
-    data_seq: dict[str, int] = {}
+    data_keys: dict[str, tuple[str, int]] = {}  # path -> (file_path, seq)
     delete_paths: list[str] = []
     eq_deletes: list[tuple[str, list[int], int]] = []  # (path, ids, seq)
     for m in manifests:
-        _, mentries = _read_avro_file(_strip_uri(m["manifest_path"]))
+        _, mentries = _read_avro_file(_local_path(m["manifest_path"]))
         for e in mentries:
             if e["status"] == 2:  # DELETED
                 continue
@@ -1306,11 +1158,11 @@ def read_iceberg(
             if seq is None:  # inherited from the manifest (spec rule)
                 seq = m.get("sequence_number") or 0
             if content == 0:
-                p = _strip_uri(df_rec["file_path"])
+                p = _local_path(df_rec["file_path"])
                 data_paths.append((p, df_rec.get("partition") or {}))
-                data_seq[p] = seq
+                data_keys[p] = (df_rec["file_path"], seq)
             elif content == 1:  # position deletes
-                delete_paths.append(_strip_uri(df_rec["file_path"]))
+                delete_paths.append(_local_path(df_rec["file_path"]))
             else:  # equality deletes
                 ids = df_rec.get("equality_ids")
                 if not ids:
@@ -1319,7 +1171,7 @@ def read_iceberg(
                         "equality_ids is not supported"
                     )
                 eq_deletes.append(
-                    (_strip_uri(df_rec["file_path"]), list(ids), seq)
+                    (_local_path(df_rec["file_path"]), list(ids), seq)
                 )
     if not data_paths:
         raise ValueError(f"{location}: snapshot {snap_id} has no data files")
@@ -1330,25 +1182,39 @@ def read_iceberg(
     if not has_deletes:
         return df
     out_cols = [c for c in df.columns if c not in ("_fp", "_pos")]
-    strip = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
+    # one broadcast map keys each row by its data file: the scan's _fp
+    # is Spark's file URI; the map gives the manifest file_path (what
+    # position deletes name, per the spec) and the sequence number. A
+    # row matching no file fails loudly — a silent miss would skip its
+    # deletes.
+    keys = spark.createDataFrame(
+        [(_spark_uri(p), fp, seq) for p, (fp, seq) in data_keys.items()],
+        "_key_fp string, _file_path string, _data_seq bigint",
+    )
+    miss = F.raise_error(
+        F.concat(
+            F.lit(f"{location}: data file matches no manifest entry: "),
+            F.col("_fp"),
+        )
+    ).cast("bigint")
+    df = df.join(F.broadcast(keys), df["_fp"] == keys["_key_fp"], "left")
+    df = df.withColumn("_data_seq", F.coalesce("_data_seq", miss))
     if delete_paths:
         positions = spark.read.parquet(*delete_paths).select(
-            strip(F.col("file_path")).alias("_del_fp"),
+            F.col("file_path").alias("_del_fp"),
             F.col("pos").cast("bigint").alias("_del_pos"),
         )
         df = df.join(
             F.broadcast(positions),
-            (F.col("_fp") == F.col("_del_fp"))
+            (F.col("_file_path") == F.col("_del_fp"))
             & (F.col("_pos") == F.col("_del_pos")),
             "left_anti",
         )
     if eq_deletes:
         # equality deletes apply to rows whose data file's sequence
         # number is STRICTLY LESS than the delete's (the spec's
-        # ordering rule — a row written after the delete survives).
-        # Per-file sequence numbers ride in via a broadcast path->seq
-        # map; each delete file anti-joins null-safe on its equality
-        # columns.
+        # ordering rule — a row written after the delete survives);
+        # each delete file anti-joins null-safe on its equality columns.
         id_to_name = {
             f["id"]: f["name"]
             for f in next(
@@ -1357,13 +1223,6 @@ def read_iceberg(
                 if s["schema-id"] == meta.get("current-schema-id", 0)
             )["fields"]
         }
-        seq_rows = [(p, s) for p, s in data_seq.items()]
-        seq_df = spark.createDataFrame(
-            seq_rows, "_seq_fp string, _data_seq bigint"
-        )
-        df = df.join(
-            F.broadcast(seq_df), df["_fp"] == seq_df["_seq_fp"], "left"
-        ).drop("_seq_fp")
         for path, ids, dseq in eq_deletes:
             try:
                 cols = [id_to_name[i] for i in ids]
@@ -1414,7 +1273,7 @@ def _scan_with_partitions(
     do carry every column scan directly; a mix of carrying and
     non-carrying files refuses rather than guessing.
 
-    ``lineage=True`` attaches ``_fp`` (normalized file path) and
+    ``lineage=True`` attaches ``_fp`` (Spark's file URI) and
     ``_pos`` (row index) from ``_metadata`` INSIDE each underlying
     parquet scan — the delete-application path needs them, and
     ``_metadata`` only resolves directly on a file-source relation,
@@ -1424,23 +1283,9 @@ def _scan_with_partitions(
     def _read(*ps: str) -> DataFrame:
         d = spark.read.parquet(*ps)
         if lineage:
-            # _metadata.file_path is a Hadoop Path URI (scheme +
-            # percent-encoding) while manifests/delete files carry
-            # decoded paths — decode to match (literal '+' protected
-            # from url_decode's form semantics; same rendering rule as
-            # the Delta DV anti-join)
-            d = d.withColumn(
-                "_fp",
-                F.url_decode(
-                    F.regexp_replace(
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), "^file:/+", "/"
-                        ),
-                        r"\+",
-                        "%2B",
-                    )
-                ),
-            ).withColumn("_pos", F.col("_metadata.row_index"))
+            d = d.withColumn("_fp", F.col("_metadata.file_path")).withColumn(
+                "_pos", F.col("_metadata.row_index")
+            )
         return d
 
     paths = [p for p, _ in data_paths]

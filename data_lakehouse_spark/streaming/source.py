@@ -42,7 +42,6 @@ import datetime
 import json
 import os
 import re
-import urllib.parse
 from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +51,12 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import StructType
+
+from data_lakehouse_spark.catalog import (
+    _partition_values,
+    _uri_path,
+    snapshot_files,
+)
 
 __all__ = [
     "LakehouseStreamDataSource",
@@ -88,33 +93,6 @@ def _published_main(entries: list[dict]) -> list[dict]:
         for e in entries
         if "branch" not in e and not e.get("staged")
     ]
-
-
-def _list_parquet(table_path: str, dirs: list[str]) -> list[str]:
-    out = []
-    for d in sorted(dirs):
-        root = os.path.normpath(os.path.join(table_path, d))
-        for dp, _, fs in os.walk(root):
-            for f in sorted(fs):
-                if f.endswith(".parquet"):
-                    out.append(os.path.join(dp, f))
-    return out
-
-
-def _hive_values(file_path: str, table_path: str, part_cols: list[str]) -> dict:
-    vals: dict[str, str | None] = {}
-    for comp in os.path.relpath(
-        os.path.dirname(file_path), table_path
-    ).split(os.sep):
-        if "=" in comp:
-            k, v = comp.split("=", 1)
-            if k in part_cols:
-                vals[k] = (
-                    None
-                    if v == "__HIVE_DEFAULT_PARTITION__"
-                    else urllib.parse.unquote(v)
-                )
-    return vals
 
 
 class _FilePartition(InputPartition):
@@ -244,11 +222,11 @@ class LakehouseStreamReader(DataSourceStreamReader):
             v = e["version"]
             if files_left <= 0 or versions_left <= 0:
                 break
-            files = _list_parquet(self.table_path, new_dirs)
-            done = min(ck, len(files)) if v == cv else 0
-            avail = len(files) - done
+            n_files = len(snapshot_files(self.table_path, sorted(new_dirs)))
+            done = min(ck, n_files) if v == cv else 0
+            avail = n_files - done
             if v == cv and avail <= 0:
-                out_v, out_k = v, len(files)
+                out_v, out_k = v, n_files
                 continue
             take = min(avail, files_left)
             out_v, out_k = v, done + take
@@ -301,12 +279,8 @@ class LakehouseStreamReader(DataSourceStreamReader):
                 # v == sv and must not re-emit them)
                 if v > sv:
                     part_cols = list(e.get("partition_by") or [])
-                    for pf in _list_parquet(
-                        self.table_path, sorted(new_dd)
-                    ):
-                        parts.append(
-                            _DeletesPartition(pf, v, part_cols)
-                        )
+                    for f in snapshot_files(self.table_path, sorted(new_dd)):
+                        parts.append(_DeletesPartition(f.path, v, part_cols))
             elif new_dd and not self.ignore_deletes:
                 raise ValueError(
                     f"lakehouse stream of {self.table}: version "
@@ -341,17 +315,14 @@ class LakehouseStreamReader(DataSourceStreamReader):
                     "expire_snapshots retention longer than consumer "
                     "lag, or restart from a fresh offset."
                 )
-            part_cols = list(e.get("partition_by") or [])
-            files = _list_parquet(self.table_path, new_dirs)
+            files = snapshot_files(
+                self.table_path,
+                sorted(new_dirs),
+                list(e.get("partition_by") or []),
+            )
             hi = min(ek, len(files)) if v == ev else len(files)
             for f in files[lo:hi]:
-                parts.append(
-                    _FilePartition(
-                        f,
-                        v,
-                        _hive_values(f, self.table_path, part_cols),
-                    )
-                )
+                parts.append(_FilePartition(f.path, v, f.partition))
         return parts
 
     # -- execution (runs on executors; Arrow end-to-end) --------------
@@ -392,13 +363,15 @@ class LakehouseStreamReader(DataSourceStreamReader):
         for fp, p in zip(
             pos.column("_file").to_pylist(), pos.column("_pos").to_pylist()
         ):
-            fp = re.sub(r"^file:/+", "/", str(fp))
-            by_file.setdefault(fp, []).append(int(p))
+            by_file.setdefault(_uri_path(fp), []).append(int(p))
         for fp in sorted(by_file):
             tbl = pq.read_table(fp).take(sorted(by_file[fp]))
             out = self._project(
                 tbl,
-                _hive_values(fp, self.table_path, partition.part_cols),
+                _partition_values(
+                    os.path.relpath(os.path.dirname(fp), self.table_path),
+                    partition.part_cols,
+                ),
                 partition.commit_version,
                 "delete",
             )
@@ -588,9 +561,7 @@ class DeltaStreamReader(DataSourceStreamReader):
         return {"version": self._initial_version()}
 
     def _abs(self, p: str) -> str:
-        p = urllib.parse.unquote(p)
-        p = re.sub(r"^file:/+", "/", p)
-        return p if os.path.isabs(p) else os.path.join(self.location, p)
+        return os.path.join(self.location, _uri_path(p))
 
     def _version_adds(self, v: int) -> list[dict]:
         """The streamable file actions of one commit, guard-checked.

@@ -769,3 +769,27 @@ def test_export_dv_falls_back_when_delete_set_exceeds_broadcast(
     # back under the threshold: zero-copy DV export again
     res = export_delta(cat, "t", str(tmp_path / "dl3"))
     assert not res["materialized"] and res["deletion_vector_files"] >= 1
+
+
+def test_history_export_refuses_dv_set_past_broadcast_threshold(
+    spark, tmp_path
+):
+    """The history twin of the test above: the history export groups
+    every positional delete of the whole history on the driver, so it
+    takes the same gate and refuses past it (it has no materialize
+    fallback)."""
+    cat = _cat(spark, tmp_path)
+    cat.create_table(
+        "t", spark.createDataFrame([(i,) for i in range(50)], "id long")
+    )
+    cat.delete_where("t", "id % 5 = 0", mode="mor")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16")
+        with pytest.raises(ValueError, match="broadcast threshold"):
+            export_delta_history(cat, "t", str(tmp_path / "dlh"))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    dest = str(tmp_path / "dlh2")
+    export_delta_history(cat, "t", dest)
+    assert _rows(read_delta(spark, dest).select("id")) == _rows(cat.read("t"))

@@ -76,3 +76,19 @@ def test_explain_analyze_returns_final_plan(spark, tmp_path):
     assert row["wall_sec"] >= 0
     assert "isFinalPlan=true" in row["plan"]
     assert "HashAggregate" in row["plan"]
+
+
+def test_null_partition_reports_json_null(spark, tmp_path):
+    c = Catalog(spark, str(tmp_path / "wh"))
+    c.create_table(
+        "n",
+        spark.createDataFrame(
+            [("d1", 1), (None, 2), (None, 3)], "d string, x long"
+        ),
+        partition_by=["d"],
+    )
+    rows = {
+        json.loads(r["partition"])["d"]: r["rows"]
+        for r in c.partitions("n").collect()
+    }
+    assert rows == {"d1": 1, None: 2}

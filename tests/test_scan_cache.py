@@ -67,6 +67,24 @@ def test_second_read_makes_no_parquet_calls(spark, tmp_path, parquet_calls):
     assert parquet_calls == []
 
 
+def test_building_a_read_starts_no_job(spark, tmp_path):
+    """Positional and equality delete dirs are read with a known schema
+    (the equality-key schema from the footer Spark writes), so building
+    a fresh catalog's read over them starts no schema-inference job."""
+    cat = Catalog(spark, str(tmp_path / "w"))
+    _mor_table(spark, cat)
+    fresh = Catalog(spark, cat.root)
+    sc = spark.sparkContext
+    sc.setJobGroup("build-read", "building a read")
+    try:
+        df = fresh.read("t")
+        jobs = sc.statusTracker().getJobIdsForGroup("build-read")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert _rows(df) == [(1, "a", 1.0), (3, "c", 30.0)]
+
+
 def test_two_reads_join_by_column(spark, tmp_path):
     """Reads built from the same cached dir frames keep distinct output
     columns, so a self-join by column reference stays unambiguous."""

@@ -8,12 +8,21 @@ cannot: anything that silently depends on ``get_spark``'s conf
 (timezone, nanosAsLong, Arrow, ANSI) instead of being pinned per query
 by ``_ensure_conf``.
 
+The sweep also runs under an adverse PATH: ``tempfile.tempdir`` (where
+the entry module builds its catalogs and scratch tables) is set to a
+fresh directory whose name contains a space, so every catalog path
+goes through Spark's percent-encoded ``file:`` URIs — a raw path
+comparison anywhere in the engine shows up as a failure here, just as
+a timezone dependence does. The directory is removed afterwards.
+
 Usage: python tools/hostile_check.py [sf_dir] [timezone]
 """
 
 from __future__ import annotations
 
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, "/root/repo")
 
@@ -43,6 +52,20 @@ def main() -> None:
         )
     orc = entrymod.oracle_sql()
     fails: list[tuple[str, str]] = []
+    tempfile.tempdir = tempfile.mkdtemp(prefix="hostile sweep ")
+    try:
+        sweep(spark, sf_dir, con, orc, fails)
+    finally:
+        shutil.rmtree(tempfile.tempdir, ignore_errors=True)
+    for name, why in fails:
+        print(f"FAIL  {name}: {why}")
+    print(f"failures: {len(fails)}")
+    sys.exit(1 if fails else 0)
+
+
+def sweep(spark, sf_dir: str, con, orc: dict, fails: list) -> None:
+    """Run every query and compare it with its oracle; append each
+    failure to ``fails``."""
     for name, fn in entrymod.queries().items():
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -62,10 +85,6 @@ def main() -> None:
                 print(f"ok    {name}: {len(a)} rows")
         except Exception as ex:  # noqa: BLE001 - report and continue
             fails.append((name, f"ERR {type(ex).__name__}: {str(ex)[:150]}"))
-    for name, why in fails:
-        print(f"FAIL  {name}: {why}")
-    print(f"failures: {len(fails)}")
-    sys.exit(1 if fails else 0)
 
 
 if __name__ == "__main__":
