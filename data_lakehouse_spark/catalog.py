@@ -198,7 +198,8 @@ def _spark_uri(path: str) -> str:
 def _in_dirs(col: str, dirs):
     """Column: true where file column ``col`` (Spark's
     ``_metadata.file_path``) lies under one of the local ``dirs`` —
-    the equality-delete read path runs this on every scan."""
+    a cloned equality delete's scope, a COW rewrite's touched dirs,
+    ``row_count``'s live files."""
     conds = [F.col(col).startswith(_spark_uri(d) + "/") for d in dirs]
     return functools.reduce(operator.or_, conds) if conds else F.lit(False)
 
@@ -595,7 +596,7 @@ class Catalog:
         branch: str | None = None,
         extra_eq_delete=None,
     ) -> TableHandle:
-        with self._commit_lock(h):
+        with self._commit_lock(h, create=op == "create"):
             return self._commit_locked(
                 h, df, op=op, replace=replace, partition_by=partition_by,
                 properties=properties, base_dirs=base_dirs,
@@ -604,14 +605,23 @@ class Catalog:
             )
 
     @contextlib.contextmanager
-    def _commit_lock(self, h: TableHandle, timeout: float = 60.0):
+    def _commit_lock(
+        self, h: TableHandle, timeout: float = 60.0, *, create: bool = False
+    ):
         """Per-table writer lock via atomic O_EXCL create. Serializes
         the version-number read, data-dir write, and manifest flip so
         concurrent commits linearize instead of clobbering each other.
         A crashed holder is detected by lock age > 10×timeout and the
         lock is broken (local-filesystem pragmatism; a real deployment
-        uses the catalog service's CAS)."""
-        os.makedirs(h.path, exist_ok=True)
+        uses the catalog service's CAS).
+
+        Only a commit that creates the table (``create``) makes the
+        table dir; any other op on a name without one raises, so it
+        leaves no empty dir behind."""
+        if create:
+            os.makedirs(h.path, exist_ok=True)
+        elif not os.path.isdir(h.path):
+            raise ValueError(f"table {h.name} does not exist")
         lock = os.path.join(h.path, "_commit.lock")
         t0 = time.time()
         while True:
@@ -671,7 +681,7 @@ class Catalog:
 
         A missing table raises, except with ``expected_version=0``: the
         commit then CREATES the table (clone)."""
-        with self._commit_lock(h):
+        with self._commit_lock(h, create=expected_version == 0):
             entries = self._load_manifest(h)
             self._check_version(h, op, entries, expected_version)
             if not entries and expected_version is None:
@@ -1000,6 +1010,16 @@ class Catalog:
             .collect()[0]
         )
         return {c: list(row[c]) for c in values}
+
+    @staticmethod
+    def _footer_rows(table_path: str, d: str) -> int:
+        """Rows in the parquet files of dir ``d``, from their footers
+        (no data read)."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(f.path).num_rows for f in snapshot_files(table_path, [d])
+        )
 
     @staticmethod
     def _dir_stats(table_path: str, d: str) -> dict:
@@ -1333,6 +1353,13 @@ class Catalog:
                 return df.repartition(n_files, *pb)
             return df.coalesce(n_files)
 
+        def head_files() -> list[SnapshotFile]:
+            # the data files of the snapshot the compaction committed,
+            # listed from its dirs: no read plan is built to count them
+            return snapshot_files(
+                h.path, self._main_head(self._load_manifest(h), name)["data_dirs"]
+            )
+
         if where is None:
             current = self.read(name)
             files_before = len(current.inputFiles())
@@ -1341,11 +1368,10 @@ class Catalog:
             self._commit(
                 h, _shape(current, n_files), op="compact", replace=True
             )
-            files_after = len(self.read(name).inputFiles())
             return {
                 "table": name,
                 "files_before": files_before,
-                "files_after": files_after,
+                "files_after": len(head_files()),
                 "bytes": bytes_total,
                 "rewritten_dirs": list(head["data_dirs"]),
                 "kept_dirs": [],
@@ -1382,8 +1408,7 @@ class Catalog:
         return {
             "table": name,
             "files_before": files_before,
-            "files_after": len(self.read(name).inputFiles())
-            - len(snapshot_files(h.path, kept)),
+            "files_after": len(head_files()) - len(snapshot_files(h.path, kept)),
             "bytes": bytes_touched,
             "rewritten_dirs": touched,
             "kept_dirs": kept,
@@ -1521,6 +1546,8 @@ class Catalog:
         addressing the matching rows by (file path, row index); data
         dirs are untouched. O(matching rows) write instead of O(touched
         dirs) — deletes cost what they delete."""
+        import shutil
+
         h, entries = self._entries(name)
         cond = F.expr(condition) if isinstance(condition, str) else condition
         is_hit = F.coalesce(cond, F.lit(False))
@@ -1529,22 +1556,27 @@ class Catalog:
             .filter(is_hit)
             .select("_file", "_pos")
         )
-        affected = positions.count()
         live = list(self._main_head(entries, name)["data_dirs"])
-        if affected == 0:
-            return {"table": name, "affected_rows": 0, "delete_dir": None,
-                    "rewritten_dirs": [], "kept_dirs": live}
         # the version check pins the commit to len(entries), so the
         # delete dir is named before the lock is taken
         ddir = f"d{len(entries):05d}"
+        affected = 0
 
         def change(locked):
+            # one pass over the table: the write is the only job, and
+            # the count comes from the footers of the files it wrote
+            nonlocal affected
             positions.write.mode("overwrite").parquet(os.path.join(h.path, ddir))
+            affected = self._footer_rows(h.path, ddir)
+            if affected == 0:
+                shutil.rmtree(os.path.join(h.path, ddir))
+                return None
             base = self._main_head(locked, name)
             return base, {"delete_dirs": list(base.get("delete_dirs") or []) + [ddir]}
 
         self._meta_commit(h, "delete_mor", change, expected_version=len(entries))
-        return {"table": name, "affected_rows": affected, "delete_dir": ddir,
+        return {"table": name, "affected_rows": affected,
+                "delete_dir": ddir if affected else None,
                 "rewritten_dirs": [], "kept_dirs": live}
 
     # -- equality deletes (Iceberg v2 content=2) ----------------------------
@@ -1758,8 +1790,6 @@ class Catalog:
             images = batch.filter(is_del == F.lit(False)).drop(op_col)
             if seq_col is not None and seq_col in images.columns:
                 images = images.drop(seq_col)
-            n_images = images.count()
-            n_keys = keys.distinct().count()
             # one manifest load serves schema check, version, and the
             # property merge — a per-microbatch path must not re-parse
             # the O(versions) manifest several times
@@ -1782,11 +1812,14 @@ class Catalog:
                 expected_version=version,
                 extra_eq_delete=(keys, list(key_cols)),
             )
+            # the commit wrote the distinct keys and the images: count
+            # them from those files' footers instead of re-running the
+            # batch plan
             return {
                 "table": name,
                 "version": version,
-                "keys_deleted": n_keys,
-                "rows_appended": n_images,
+                "keys_deleted": self._footer_rows(h.path, f"e{version:05d}"),
+                "rows_appended": self._footer_rows(h.path, f"v{version:05d}"),
             }
         finally:
             batch.unpersist(blocking=False)
@@ -2703,8 +2736,10 @@ class Catalog:
                 continue
             dirs.append(d)
         pos_dirs, eq_recs = self._dd_split(entry.get("delete_dirs") or [])
-        lineage = with_lineage or bool(pos_dirs) or bool(eq_recs)
-        df = self._project_dirs(h, entries, entry, dirs, lineage=lineage)
+        lineage = with_lineage or bool(pos_dirs) or self._eq_scoped_by_file(eq_recs)
+        df = self._project_dirs(
+            h, entries, entry, dirs, lineage=lineage, with_seq=bool(eq_recs)
+        )
         if pos_dirs:
             # merge-on-read: subtract positional deletes. The delete set
             # broadcasts while its on-disk bytes fit the threshold —
@@ -2724,7 +2759,7 @@ class Catalog:
                 "left_anti",
             )
         if eq_recs:
-            df = self._apply_eq_deletes(h, entries, entry, df, dirs, eq_recs)
+            df = self._apply_eq_deletes(h, entry, df, eq_recs).drop("_eq_seq")
         if lineage and not with_lineage:
             df = df.drop("_file", "_pos")
         self._evict_outside(h, entry)
@@ -2733,22 +2768,22 @@ class Catalog:
     def _apply_eq_deletes(
         self,
         h: TableHandle,
-        entries: list[dict],
         entry: dict,
         df: DataFrame,
-        dirs: list[str],
         eq_recs: list[dict],
     ) -> DataFrame:
         """Merge-on-read equality deletes (Iceberg v2 content=2
         semantics): each delete's broadcast key set anti-joins
         null-safe on its equality columns, restricted to rows whose
         data dir's sequence (commit version) is STRICTLY LOWER than
-        the delete's — rows appended after the delete survive. The
-        per-row sequence comes from a bounded when-chain over the
-        snapshot's dirs (O(commits) branches, resolved at plan time —
-        handles cloned dirs whose names don't encode a local version).
-        Equality columns are recorded by stable field id at delete
-        time, so reads resolve them through renames.
+        the delete's — rows appended after the delete survive. ``df``
+        comes from ``_project_dirs(..., with_seq=True)``: every row
+        carries its dir's sequence as the ``_eq_seq`` literal of its
+        union part, so no per-row path test decides it (and
+        ``_file`` lineage is needed only for cloned records, see
+        :meth:`_eq_scope`). Equality columns are recorded by stable
+        field id at delete time, so reads resolve them through
+        renames. The result keeps ``_eq_seq``; callers drop it.
 
         STATS-DRIVEN broadcast: each delete's key set broadcasts only
         while its on-disk bytes fit the auto-broadcast threshold (the
@@ -2757,7 +2792,6 @@ class Catalog:
         maintenance folds must not ship it to every task; past the
         threshold the anti-join falls back to shuffle and AQE plans
         it."""
-        df = self._with_dir_seq(h, entries, df, dirs)
         thr = self._broadcast_threshold()
         for rec in eq_recs:
             dels, keys_cond = self._eq_keys(h, entry, rec)
@@ -2768,7 +2802,7 @@ class Catalog:
                 self._eq_scope(h, rec) & keys_cond,
                 "left_anti",
             )
-        return df.drop("_eq_seq")
+        return df
 
     def _dir_bytes(self, h: TableHandle, d: str) -> int:
         """On-disk bytes of one table dir (metadata-only walk), cached
@@ -2848,45 +2882,11 @@ class Catalog:
             return F.col("_eq_seq") < F.lit(int(rec["seq"]))
         return _in_dirs("_file", [os.path.join(h.path, d) for d in ap])
 
-    def _with_dir_seq(
-        self, h: TableHandle, entries: list[dict], df: DataFrame, dirs
-    ) -> DataFrame:
-        """Tag each row with its data dir's sequence as ``_eq_seq``
-        (bounded when-chain over the snapshot's dirs; requires
-        ``_file`` lineage). The chain is O(snapshot dirs) expression
-        nodes — bounded by commit count, and kept small in practice by
-        the same maintenance loop that bounds the delete files
-        themselves (:meth:`maintain`: compaction collapses the dir
-        list, delete folding removes the need for the tag entirely).
-
-        A row whose ``_file`` matches NO snapshot dir FAILS LOUDLY: a
-        low tag like ``-1`` would sit strictly below every delete's
-        sequence — i.e. INSIDE every equality delete's scope — so any
-        path-rendering mismatch between the manifest dirs and Spark's
-        ``_metadata.file_path`` (symlinked temp roots, non-``file:``
-        URI schemes) would silently over-delete, including the
-        same-commit images a CDC upsert just wrote."""
-        miss = F.raise_error(
-            F.concat(
-                F.lit(
-                    "equality-delete sequencing: data file matches no "
-                    f"snapshot dir of table at {h.path!r} "
-                    "(path-rendering mismatch?): "
-                ),
-                F.col("_file"),
-            )
-        ).cast("bigint")
-        seq_expr = None
-        for d in dirs:
-            hit = _in_dirs("_file", [os.path.join(h.path, d)])
-            s = F.lit(self._dir_seq(entries, d)).cast("bigint")
-            seq_expr = (
-                F.when(hit, s) if seq_expr is None else seq_expr.when(hit, s)
-            )
-        return df.withColumn(
-            "_eq_seq",
-            seq_expr.otherwise(miss) if seq_expr is not None else miss,
-        )
+    @staticmethod
+    def _eq_scoped_by_file(eq_recs: list[dict]) -> bool:
+        """Whether applying ``eq_recs`` needs ``_file`` lineage: only
+        cloned records scope by file path (see :meth:`_eq_scope`)."""
+        return any("applies_to" in rec for rec in eq_recs)
 
     def _eq_keys(self, h: TableHandle, entry: dict, rec: dict):
         """(broadcast-ready key frame, null-safe key condition) for one
@@ -2962,8 +2962,12 @@ class Catalog:
         dirs: list[str],
         *,
         lineage: bool = False,
+        with_seq: bool = False,
     ) -> DataFrame:
-        """Read the given snapshot dirs projected to ``entry``'s schema.
+        """Read the given snapshot dirs projected to ``entry``'s schema
+        (plus ``_file``/``_pos`` lineage, and with ``with_seq`` each
+        dir's sequence as the bigint literal ``_eq_seq`` that equality
+        deletes scope by — see :meth:`_dir_seq`).
 
         Each snapshot dir is its own partition-discovery root (they all
         hold k=v partition subdirs for partitioned tables), so read them
@@ -2998,9 +3002,10 @@ class Catalog:
         ]
         out_names = [f.name for f in schema.fields] + (
             ["_file", "_pos"] if lineage else []
-        )
+        ) + (["_eq_seq"] if with_seq else [])
 
-        def project(d: str) -> DataFrame:
+        def project(d: str, seq: int | None) -> DataFrame:
+            seq_cols = [] if seq is None else [F.lit(seq).cast("bigint").alias("_eq_seq")]
             p = os.path.join(h.path, d)
             wentry = self._writer_entry(entries, entry, d)
             writer_ids = _ids(wentry["schema"]["fields"]) if target_ids else None
@@ -3018,8 +3023,16 @@ class Catalog:
                     raw = raw.select("*", *lin_cols)
                 # partition columns come back from directory names;
                 # enforce the declared column order
-                return raw.select(*out_names)
-            wschema = StructType.fromJson(wentry["schema"])
+                return raw.select("*", *seq_cols).select(*out_names)
+            # read without the manifest's field metadata: once Catalyst
+            # drops a same-type cast below, the alias exposes the
+            # reader's metadata, and rewrites would copy field ids into
+            # their footers depending on plan shape
+            wschema = StructType.fromJson(
+                {**wentry["schema"], "fields": [
+                    {**f, "metadata": {}} for f in wentry["schema"]["fields"]
+                ]}
+            )
             raw = (
                 self.spark.read.schema(wschema).option("basePath", p).parquet(p)
             )
@@ -3045,15 +3058,21 @@ class Catalog:
                     )
             if lineage:
                 cols.extend(lin_cols)
-            return raw.select(*cols)
+            return raw.select(*cols, *seq_cols)
 
         # a dir's projection depends on the dir (its writer entry is
-        # fixed by it), the target schema and the lineage flag
-        variant = ("data", self._schema_key(entry), lineage)
-        parts = [
-            self._dir_cached(h, d, variant, lambda d=d: project(d))
-            for d in dirs
-        ]
+        # fixed by it), the target schema, the lineage flag and the
+        # sequence it is tagged with
+        schema_key = self._schema_key(entry)
+        parts = []
+        for d in dirs:
+            seq = self._dir_seq(entries, d) if with_seq else None
+            parts.append(
+                self._dir_cached(
+                    h, d, ("data", schema_key, lineage, seq),
+                    lambda d=d, seq=seq: project(d, seq),
+                )
+            )
         if not parts:  # every dir pruned away / no dirs requested
             empty = self.spark.createDataFrame([], schema)
             if lineage:
@@ -3062,6 +3081,8 @@ class Catalog:
                     F.lit(None).cast("string").alias("_file"),
                     F.lit(None).cast("bigint").alias("_pos"),
                 )
+            if with_seq:
+                empty = empty.select("*", F.lit(None).cast("bigint").alias("_eq_seq"))
             return empty.select(*out_names)
         # every part already has the out_names columns in order, so a
         # positional union is the by-name union; toDF re-aliases them,
@@ -3114,9 +3135,10 @@ class Catalog:
             # and MOR-deleted within the span nets to no change; a row
             # already deleted at `from` can't be deleted again)
             pos_d, eq_r = self._dd_split(ddirs)
-            lineage = bool(pos_d) or bool(eq_r)
+            lineage = bool(pos_d) or self._eq_scoped_by_file(eq_r)
             df = self._project_dirs(
-                h, entries, te, sorted(dirs), lineage=lineage
+                h, entries, te, sorted(dirs), lineage=lineage,
+                with_seq=bool(eq_r),
             )
             if pos_d:
                 df = df.join(
@@ -3125,9 +3147,7 @@ class Catalog:
                     "left_anti",
                 )
             if eq_r:
-                df = self._apply_eq_deletes(
-                    h, entries, te, df, sorted(dirs), eq_r
-                )
+                df = self._apply_eq_deletes(h, te, df, eq_r).drop("_eq_seq")
             if lineage:
                 df = df.drop("_file", "_pos")
             return df
@@ -3156,7 +3176,9 @@ class Catalog:
             # remainder so a row matched by two deletes images once)
             dirs_c = sorted(common)
             pos_f, eq_f = self._dd_split(fdd)
-            base = self._project_dirs(h, entries, te, dirs_c, lineage=True)
+            base = self._project_dirs(
+                h, entries, te, dirs_c, lineage=True, with_seq=True
+            )
             if pos_f:
                 base = base.join(
                     F.broadcast(self._read_positions(h, pos_f)),
@@ -3164,9 +3186,8 @@ class Catalog:
                     "left_anti",
                 )
             if eq_f:
-                base = self._apply_eq_deletes(
-                    h, entries, te, base, dirs_c, eq_f
-                )
+                # keeps _eq_seq: the new deletes below scope by it too
+                base = self._apply_eq_deletes(h, te, base, eq_f)
             if new_pos_dd:
                 # a row killed positionally within the span images in
                 # the positional block below — exclude it here so a row
@@ -3176,7 +3197,7 @@ class Catalog:
                     ["_file", "_pos"],
                     "left_anti",
                 )
-            remaining = self._with_dir_seq(h, entries, base, dirs_c)
+            remaining = base
             images = None
             for rec in new_eq_dd:
                 dels, keys_cond = self._eq_keys(h, te, rec)
@@ -3313,8 +3334,6 @@ class Catalog:
         Iceberg/Delta trick that answers ``SELECT COUNT(*)`` without
         touching data. Falls back to footer reads for legacy dirs
         committed before stats existed."""
-        import pyarrow.parquet as pq
-
         h, entries = self._entries(name)
         entry = (
             entries[version]
@@ -3327,10 +3346,7 @@ class Catalog:
             if stats and "rows" in stats:
                 total += stats["rows"]
                 continue
-            total += sum(
-                pq.read_metadata(f.path).num_rows
-                for f in snapshot_files(h.path, [d])
-            )
+            total += self._footer_rows(h.path, d)
         pos_dirs, eq_recs = self._dd_split(entry.get("delete_dirs") or [])
         if eq_recs:
             # EQUALITY deletes suppress by key, not by position — the

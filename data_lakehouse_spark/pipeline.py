@@ -70,7 +70,7 @@ class MedallionPipeline:
             self.catalog.append("bronze_events", df)
         else:
             self.catalog.create_table("bronze_events", df)
-        n = self.catalog.read("bronze_events").count()
+        n = self.catalog.row_count("bronze_events")
         return {"table": "bronze_events", "total_rows": n, "drift": drift}
 
     def ingest_bronze_interval(
@@ -285,7 +285,7 @@ class MedallionPipeline:
                 self.catalog.create_table(
                     name, df, partition_by=self.GOLD_PARTITION_BY.get(name)
                 )
-            out[name] = self.catalog.read(name).count()
+            out[name] = self.catalog.row_count(name)
         return out
 
     # -- end to end --------------------------------------------------------

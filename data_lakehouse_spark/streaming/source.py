@@ -27,7 +27,11 @@ source has:
 - a **MOR delete** in the span fails unless ``ignoreDeletes=true``
   (skip it) or ``readChangeFeed=true`` (CDF mode: the deleted row
   images stream as ``_change_type='delete'`` with the delete commit's
-  version — Delta's ``readChangeFeed`` readStream analog).
+  version — Delta's ``readChangeFeed`` readStream analog). An
+  **equality delete** (``upsert_cdc``, ``mode='mor-eq'``) is skipped
+  under ``ignoreDeletes=true`` (the upsert's new images still stream as
+  inserts); ``readChangeFeed=true`` refuses it, since imaging a key
+  delete takes a join (``catalog.table_changes`` is the batch path).
 
 The reader is Arrow end-to-end: each partition reads its file with
 ``pyarrow`` and yields ``RecordBatch``es cast to the query schema
@@ -53,6 +57,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from data_lakehouse_spark.catalog import (
+    Catalog,
     _partition_values,
     _uri_path,
     snapshot_files,
@@ -259,9 +264,30 @@ class LakehouseStreamReader(DataSourceStreamReader):
             if v == sv and sk == _ALL_FILES:
                 continue  # start version already fully consumed
             prev_dirs = set(prev["data_dirs"]) if prev else set()
-            prev_dd = set((prev or {}).get("delete_dirs") or [])
+            prev_dd = {
+                Catalog._dd_name(d) for d in (prev or {}).get("delete_dirs") or []
+            }
             removed = prev_dirs - set(e["data_dirs"])
-            new_dd = set(e.get("delete_dirs") or []) - prev_dd
+            # positional dirs are names; equality deletes are records
+            pos_new, eq_new = Catalog._dd_split(
+                [
+                    d
+                    for d in e.get("delete_dirs") or []
+                    if Catalog._dd_name(d) not in prev_dd
+                ]
+            )
+            new_dd = set(pos_new)
+            if eq_new and self.read_changefeed:
+                # an equality delete suppresses rows by key: its row
+                # images need a join against the table, which the
+                # batch change feed does and a per-file stream cannot
+                raise ValueError(
+                    f"lakehouse stream of {self.table}: version "
+                    f"{v} committed equality deletes (upsert_cdc or "
+                    "delete_where(mode='mor-eq')), which the streamed "
+                    "change feed cannot image; read them batch-wise "
+                    "with catalog.table_changes."
+                )
             if removed and not self.ignore_changes:
                 raise ValueError(
                     f"lakehouse stream of {self.table}: version "
@@ -281,7 +307,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
                     part_cols = list(e.get("partition_by") or [])
                     for f in snapshot_files(self.table_path, sorted(new_dd)):
                         parts.append(_DeletesPartition(f.path, v, part_cols))
-            elif new_dd and not self.ignore_deletes:
+            elif (new_dd or eq_new) and not self.ignore_deletes:
                 raise ValueError(
                     f"lakehouse stream of {self.table}: version "
                     f"{v} committed MOR deletes. Deletes "

@@ -10,7 +10,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_lakehouse_spark.catalog import Catalog
 
@@ -113,26 +112,26 @@ def test_random_dml_sequences_match_model(spark, tmp_path, seed):
     assert final == model
 
 
-def test_eq_seq_unmatched_file_fails_loudly(spark, tmp_path):
-    """A row whose _file lineage matches NO snapshot dir must fail the
-    read loudly — a silent low tag (-1) would sit strictly below every
-    equality delete's sequence, i.e. inside every delete's scope, so a
-    path-rendering mismatch (symlinked roots, non-file: URI schemes)
-    would silently over-delete. The guard turns that into an error
-    naming the offending file."""
-    cat = Catalog(spark, str(tmp_path / "w"))
+def test_eq_seq_needs_no_path_match(spark, tmp_path):
+    """Equality deletes scope rows by their dir's sequence, which each
+    dir's part of the read carries as a literal: no per-row test of
+    ``_file`` against a rendering of the manifest dirs, so the table
+    reads the same through a symlinked root and through the real one,
+    the upsert's same-commit images included."""
+    real = tmp_path / "real"
+    real.mkdir()
+    link = tmp_path / "link"
+    link.symlink_to(real, target_is_directory=True)
+    cat = Catalog(spark, str(link / "w"))
     cat.create_table(
         "t", spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     )
     cat.delete_where("t", "v = 'a'", mode="mor-eq", equality_cols=["id"])
-    # the normal read stays green (every file matches its dir)
-    assert sorted(r["id"] for r in cat.read("t").collect()) == [2]
-    # a frame with out-of-table lineage trips the guard
-    h = cat._handle("t")
-    entries = cat._load_manifest(h)
-    head = cat._main_head(entries, "t")
-    dirs = list(head["data_dirs"])
-    bogus = cat.read("t").withColumn("_file", F.lit("/nowhere/else/f.parquet"))
-    tagged = cat._with_dir_seq(h, entries, bogus, dirs)
-    with pytest.raises(Exception, match="matches no snapshot dir"):
-        tagged.collect()
+    cat.upsert_cdc(
+        "t",
+        spark.createDataFrame([(2, "B", "U"), (1, "x", "I")], "id long, v string, _op string"),
+        ["id"],
+    )
+    assert sorted(tuple(r) for r in cat.read("t").collect()) == [(1, "x"), (2, "B")]
+    again = Catalog(spark, str(real / "w"))
+    assert sorted(tuple(r) for r in again.read("t").collect()) == [(1, "x"), (2, "B")]

@@ -175,6 +175,12 @@ def test_medallion_end_to_end_incremental(spark, tmp_path):
     assert cat.read("silver_events").count() == 8
     # observed metrics describe the INCREMENT, not the whole table
     assert stats2["silver"]["observed"]["rows_written"] == 3
+    # bronze and gold counts come from commit metadata, not a scan, and
+    # equal a full count
+    assert stats2["bronze"]["total_rows"] == cat.read("bronze_events").count() == 8
+    assert stats2["gold"] and stats2["gold"] == {
+        n: cat.read(n).count() for n in stats2["gold"]
+    }
     # re-running with no new data must not duplicate
     stats3 = pipe.ingest_bronze(
         spark.createDataFrame([], EVENTS), "empty.parquet"

@@ -261,3 +261,23 @@ def test_meta_commits_carry_base_fields(spark, tmp_path):
     txn.append("t", spark.createDataFrame(_rows([22]), S1))
     check(txn.commit, main, set())
     assert _manifest(cat, "t")[-1]["txn_id"] == txn.txn_id
+
+
+def test_locked_ops_on_a_missing_table_leave_no_dir(spark, tmp_path):
+    """Only a commit that creates a table makes its dir: a locked op on
+    a name with no table raises and leaves nothing under the root."""
+    root = tmp_path / "w"
+    cat = Catalog(spark, str(root))
+    ops = {
+        "add_column": lambda: cat.add_column("m1", "x", "int"),
+        "create_branch": lambda: cat.create_branch("m2", "b"),
+        "drop_tag": lambda: cat.drop_tag("m3", "tag"),
+        "expire_snapshots": lambda: cat.expire_snapshots("m4"),
+    }
+    for label, op in ops.items():
+        with pytest.raises(ValueError, match="does not exist"):
+            op()
+        assert os.listdir(root) == [], label
+    cat.create_table("m1", spark.createDataFrame([(1,)], "id long"))
+    cat.clone_table("m1", "m5")
+    assert sorted(os.listdir(root)) == ["m1", "m5"]

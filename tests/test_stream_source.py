@@ -176,6 +176,41 @@ def test_mor_delete_fails_unless_ignored(spark, tmp_path):
     assert (3, "insert", 2) in _sunk(spark, out2)
 
 
+def test_equality_deletes_skip_or_refuse(spark, tmp_path):
+    """An upsert_cdc commits an equality delete next to its images: the
+    stream skips the delete under ignoreDeletes (the images stream as
+    inserts), refuses it by default, and refuses it in change-feed mode
+    (a key delete has no per-file row images; table_changes has them)."""
+    from pyspark.errors import StreamingQueryException
+
+    cat = _cat(spark, tmp_path)
+    cat.create_table(
+        "t", spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    )
+    cat.upsert_cdc(
+        "t",
+        spark.createDataFrame([(2, "B", "U")], "id long, v string, _op string"),
+        ["id"],
+    )
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    _drain(
+        spark, stream_table(spark, cat.root, "t", ignoreDeletes="true"), out, ck
+    )
+    assert _sunk(spark, out) == [(1, "insert", 0), (2, "insert", 0), (2, "insert", 1)]
+    for opts, match in (({}, "MOR deletes"), ({"readChangeFeed": "true"}, "table_changes")):
+        tag = "cdf" if opts else "plain"
+        q = (
+            stream_table(spark, cat.root, "t", **opts)
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / f"out-{tag}"))
+            .option("checkpointLocation", str(tmp_path / f"ck-{tag}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        with pytest.raises(StreamingQueryException, match=match):
+            q.awaitTermination(180)
+
+
 def test_partition_values_and_schema_drift(spark, tmp_path):
     """Hive partition values are restored at the declared type, and a
     file written BEFORE add_column streams with null backfill under
