@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import itertools
 import json
 import operator
 import os
@@ -49,6 +50,8 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from data_lakehouse_spark.session import collect
 
 __all__ = ["Catalog", "TableHandle", "apply_partition_transforms"]
 
@@ -86,6 +89,19 @@ def _fsync_dir(path: str) -> None:
         os.close(fd)
 
 
+#: in-process write generations of the JSON files ``_write_json``
+#: replaces, in hashed slots (bounded; a shared slot only makes a
+#: stamp change when it need not). Two equal-size rewrites of one file
+#: within one filesystem timestamp tick can reuse the inode and repeat
+#: ``(st_ino, st_mtime_ns, st_size)``; the generation still differs.
+_WRITE_GEN = [0] * 4096
+_WRITE_SEQ = itertools.count(1)
+
+
+def _gen_slot(path: str) -> int:
+    return hash(os.path.abspath(path)) % len(_WRITE_GEN)
+
+
 def _write_json(path: str, obj) -> None:
     """Atomically replace ``path`` with ``obj`` as JSON, durable across
     power loss: write a tmp file, fsync it, rename it over ``path``,
@@ -98,7 +114,22 @@ def _write_json(path: str, obj) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+    # bump after the replace: a stamp read in between pairs the new
+    # file with the old generation, a key no later lookup makes (bumped
+    # first, it could pair the old file's content with the new one)
+    _WRITE_GEN[_gen_slot(path)] = next(_WRITE_SEQ)
     _fsync_dir(os.path.dirname(path))
+
+
+def _json_stamp(path: str) -> tuple | None:
+    """What changes whenever ``path`` is replaced: its inode, mtime and
+    size (another process's writes) and its write generation (this
+    process's). ``None`` while the file does not exist."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return (st.st_ino, st.st_mtime_ns, st.st_size, _WRITE_GEN[_gen_slot(path)])
 
 
 def _read_json(path: str, default):
@@ -437,6 +468,26 @@ class Catalog:
         if head is None:
             raise ValueError(f"table {name} has no main-lineage snapshot")
         return head
+
+    @staticmethod
+    def _published_head(
+        entries: list[dict], name: str, as_of: str | None = None
+    ) -> dict:
+        """The snapshot a default read resolves: the last PUBLISHED
+        main-lineage entry (staged WAP entries are skipped), committed
+        at or before ``as_of`` when given; raises if there is none."""
+        candidates = [
+            e for e in entries if not e.get("staged") and "branch" not in e
+        ]
+        if as_of is not None:
+            candidates = [e for e in candidates if e["committed_at"] <= as_of]
+            if not candidates:
+                raise ValueError(
+                    f"no snapshot of {name} existed at or before {as_of}"
+                )
+        if not candidates:
+            raise ValueError(f"table {name} has no published snapshot")
+        return candidates[-1]
 
     def _tags_path(self, h: TableHandle) -> str:
         return os.path.join(h.path, "_tags.json")
@@ -1468,7 +1519,7 @@ class Catalog:
         )
         hit_files = [
             r["_cow_file"]
-            for r in cur.filter(is_hit).select("_cow_file").distinct().collect()
+            for r in collect(cur.filter(is_hit).select("_cow_file").distinct())
         ]
         touched, kept, in_touched = self._touched_dirs(h, live, hit_files)
         if not touched:
@@ -1894,7 +1945,7 @@ class Catalog:
             for f in source.select(*on).schema.fields
             if f.dataType.simpleString() in ("string", "binary")
         ]
-        krow = (
+        krow = collect(
             source.groupBy(*on)
             .agg(F.count(F.lit(1)).alias("_dupn"))
             .agg(
@@ -1905,8 +1956,7 @@ class Catalog:
                     for i, c in enumerate(var_keys)
                 ],
             )
-            .first()
-        )
+        )[0]
         n_src_keys = int(krow["_nkeys"] or 0)
         src_avg_len = {
             c: krow[f"_avglen_{i}"] for i, c in enumerate(var_keys)
@@ -1983,7 +2033,7 @@ class Catalog:
             hits = tgt.join(src_keys, key_cond, "left_semi")
         hit_files = [
             r["_cow_file"]
-            for r in hits.select("_cow_file").distinct().collect()
+            for r in collect(hits.select("_cow_file").distinct())
         ]
         touched, kept, in_touched = self._touched_dirs(
             h, head["data_dirs"], hit_files
@@ -2682,22 +2732,7 @@ class Catalog:
             if entry is None:
                 raise ValueError(f"branch {branch!r} does not exist on {name}")
         else:
-            candidates = [
-                e
-                for e in entries
-                if not e.get("staged") and "branch" not in e
-            ]
-            if as_of is not None:
-                candidates = [
-                    e for e in candidates if e["committed_at"] <= as_of
-                ]
-                if not candidates:
-                    raise ValueError(
-                        f"no snapshot of {name} existed at or before {as_of}"
-                    )
-            if not candidates:
-                raise ValueError(f"table {name} has no published snapshot")
-            entry = candidates[-1]
+            entry = self._published_head(entries, name, as_of)
         if entry.get("expired"):
             raise ValueError(
                 f"version {entry['version']} of {name} has been expired "
@@ -3333,12 +3368,14 @@ class Catalog:
         minus positional-delete counts (delete-file footers) — the
         Iceberg/Delta trick that answers ``SELECT COUNT(*)`` without
         touching data. Falls back to footer reads for legacy dirs
-        committed before stats existed."""
+        committed before stats existed. Without ``version`` it counts
+        the snapshot a default :meth:`read` returns, the last published
+        one: staged WAP commits are not counted until published."""
         h, entries = self._entries(name)
         entry = (
             entries[version]
             if version is not None
-            else self._main_head(entries, name)
+            else self._published_head(entries, name)
         )
         total = 0
         for d in entry["data_dirs"]:
@@ -3721,6 +3758,39 @@ class Catalog:
         self.register_views(names={name})
         return self.spark.sql(views[name])
 
+    @staticmethod
+    def _view_closure(names: set[str], views: dict[str, str]) -> set[str]:
+        """``names`` plus every identifier of the views they pull in:
+        later views reference earlier ones, so a reverse walk collects
+        everything a requested view needs (an over-approximation by
+        identifier scan — an extra name is harmless, a missing one
+        is not)."""
+        needed = set(names)
+        for vname in reversed(list(views)):
+            if vname in needed:
+                needed |= set(re.findall(r"[A-Za-z_][A-Za-z_0-9]*", views[vname]))
+        return needed
+
+    def read_stamp(self, names: set[str]) -> tuple[tuple, frozenset[str]]:
+        """(stamp, tables) of what a statement over identifiers
+        ``names`` reads through :meth:`register_views`: ``tables`` are
+        the catalog tables of the view closure, and ``stamp`` changes
+        whenever a commit, tag change or view change — by this process
+        or another — could change what the statement reads (see
+        :func:`_json_stamp`). The views file is stamped before it is
+        read, so a view change racing this call makes the stamp stale,
+        never current for the old closure. It stats files and reads
+        the views file; no manifest is parsed."""
+        views_stamp = _json_stamp(self._views_path())
+        parts, tables = [], set()
+        for name in sorted(self._view_closure(names, self.views())):
+            path = os.path.join(self.root, name)
+            m = _json_stamp(os.path.join(path, "_manifest.json"))
+            if m is not None:
+                tables.add(name)
+                parts.append((name, m, _json_stamp(os.path.join(path, "_tags.json"))))
+        return (views_stamp, *parts), frozenset(tables)
+
     def register_views(self, names: set[str] | None = None) -> None:
         """Expose tables AND defined SQL views for spark.sql() (views
         registered in definition order, so later views may build on
@@ -3737,16 +3807,7 @@ class Catalog:
             needed_tables = set(self.tables())
             needed_views = set(views)
         else:
-            # dependency closure: later views reference earlier ones,
-            # so a reverse walk collects everything a requested view
-            # pulls in (an over-approximation by identifier scan —
-            # registering an extra table is harmless, missing one is
-            # not)
-            needed = set(names)
-            for vname in reversed(list(views)):
-                if vname in needed:
-                    needed |= set(re.findall(r"[A-Za-z_][A-Za-z_0-9]*",
-                                             views[vname]))
+            needed = self._view_closure(names, views)
             needed_tables = needed & set(self.tables())
             needed_views = needed & set(views)
         for name in sorted(needed_tables):

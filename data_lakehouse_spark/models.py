@@ -460,7 +460,9 @@ class ModelRunner:
                 "staged_version": staged_v,
             }
         df = self._query(self.render(name, is_incremental=True))
-        before = self.catalog.row_count(name)  # before staging: main head
+        # before staging: the published head, which is also the main
+        # head (txn.append refuses another writer's staged head)
+        before = self.catalog.row_count(name)
         txn.append(name, df)
         staged_v = txn._staged[name][0]
         self._staged_reads[name] = staged_v

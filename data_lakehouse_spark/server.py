@@ -29,6 +29,8 @@ API
   SparkSession); with none open, statements run fully parallel.
 - ``GET /tables`` → ``{"tables": [...], "views": [...]}``
 - ``GET /health`` → ``{"ok": true, ...}``
+- ``GET /metrics`` → ``{"result_cache": {"hits", "misses",
+  "uncacheable": {reason: n}, "entries", "bytes", "budget_bytes"}}``
 - ``GET /dashboard`` → the declarative BI bundle (serving.py): title,
   slug, layout, chart slugs
 - ``GET /chart/<slug>`` → compile that chart spec to its SQL and run it
@@ -42,6 +44,12 @@ never O(catalog) work per request), and a resolving transaction
 triggers one catalog-wide refresh so its read-your-own-writes views
 stop shadowing.
 
+Result cache: a query outside a transaction whose result depends only
+on catalog snapshots is answered again from a copy of its stored
+result, without registering views, planning or running a Spark job,
+until a commit, tag change or view change touches a table it reads
+(:class:`_ResultCache`, keyed by :meth:`SqlEndpoint._result_key`).
+
 Scale note: result sets are driver-materialized (``limit`` caps them,
 default 1000, hard server cap) — this is a SERVING endpoint for
 dashboards/dbt-style queries over marts, not a bulk-extract path; bulk
@@ -50,11 +58,16 @@ egress belongs in a sink (``sources/writers.py``).
 
 from __future__ import annotations
 
+import collections
 import json
+import os
+import pickle
 import re as _re
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from data_lakehouse_spark.session import collect
 
 __all__ = ["SqlEndpoint"]
 
@@ -68,6 +81,33 @@ MAX_ROWS = 100_000
 _TXN_VERB = _re.compile(
     r"^\s*(BEGIN|START(\s+TRANSACTION)?|COMMIT|ROLLBACK)\b", _re.I
 )
+
+#: byte budget of the endpoint's result cache: the pickled result sets
+#: plus their statement texts. Least-recently-used entries are evicted
+#: past it; a result larger than the whole budget is not stored.
+RESULT_CACHE_BYTES = 64 * 1024 * 1024
+
+#: functions whose value changes between runs of an unchanged plan but
+#: which Catalyst reports as deterministic (their pretty names as the
+#: analyzed plan renders them)
+_TIME_OR_USER = _re.compile(
+    r"\b(current_timestamp|current_date|current_time|curdate|now|"
+    r"localtimestamp|current_user|user|session_user|current_database|"
+    r"current_schema|current_catalog)\("
+)
+
+#: a relation read straight from a path (``parquet.`/dir```, any
+#: ``<format>.`...``` or a bare ``parquet.dir``): the files it reads
+#: are not a catalog snapshot, so no stamp covers them
+_PATH_READ = _re.compile(
+    r"\b\w+\s*\.\s*`|\b(parquet|orc|json|csv|text|avro|binaryfile|xml|delta)"
+    r"\s*\.\s*\w",
+    _re.I,
+)
+
+#: what Spark writes where it shortens a plan or expression rendering
+#: (``... 5 more fields``): the rendering no longer shows every function
+_TRUNCATED = _re.compile(r"\.\.\. \d+ more (fields|characters)")
 
 
 class _RwLock:
@@ -133,6 +173,63 @@ class _Session:
         self.aborted: str | None = None
 
 
+class _ResultCache:
+    """Result sets of queries keyed by everything they depend on (see
+    :meth:`SqlEndpoint._result_key`), least-recently-used first out
+    under :data:`RESULT_CACHE_BYTES`. Results are stored pickled, so
+    every hit returns a fresh copy a caller may change. Counts hits,
+    misses and, by reason, the queries whose result was not stored."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._entries: collections.OrderedDict[tuple, tuple[bytes, int]] = (
+            collections.OrderedDict()
+        )
+        self._bytes = 0
+        self._hits = self._misses = 0
+        self._uncacheable: collections.Counter[str] = collections.Counter()
+
+    def get(self, key: tuple) -> dict | None:
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is None:
+                self._misses += 1
+                return None
+            self._entries.move_to_end(key)
+            self._hits += 1
+        return pickle.loads(entry[0])
+
+    def put(self, key: tuple, result: dict) -> None:
+        blob = pickle.dumps(result, protocol=pickle.HIGHEST_PROTOCOL)
+        size = len(blob) + len(key[0])
+        if size > RESULT_CACHE_BYTES:
+            self.skip("too_large")
+            return
+        with self._lock:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self._bytes -= old[1]
+            self._entries[key] = (blob, size)
+            self._bytes += size
+            while self._bytes > RESULT_CACHE_BYTES:
+                self._bytes -= self._entries.popitem(last=False)[1][1]
+
+    def skip(self, reason: str) -> None:
+        with self._lock:
+            self._uncacheable[reason] += 1
+
+    def metrics(self) -> dict:
+        with self._lock:
+            return {
+                "hits": self._hits,
+                "misses": self._misses,
+                "uncacheable": dict(self._uncacheable),
+                "entries": len(self._entries),
+                "bytes": self._bytes,
+                "budget_bytes": RESULT_CACHE_BYTES,
+            }
+
+
 class SqlEndpoint:
     """Serve ``catalog`` over HTTP/JSON on ``host:port`` (port 0 picks
     a free port — read it back from ``.port`` after ``start()``)."""
@@ -180,6 +277,9 @@ class SqlEndpoint:
         #: seconds a transaction may stay open before auto-rollback
         self.txn_timeout = 300.0
         self.max_sessions = 128
+        #: snapshot-exact result sets of repeated queries (see
+        #: _result_key); read and filled under the gate's read side
+        self._results = _ResultCache()
         endpoint = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -197,6 +297,10 @@ class SqlEndpoint:
             def do_GET(self):
                 if self.path == "/health":
                     self._json(200, {"ok": True})
+                elif self.path == "/metrics":
+                    self._json(
+                        200, {"result_cache": endpoint._results.metrics()}
+                    )
                 elif self.path == "/tables":
                     self._json(
                         200,
@@ -322,7 +426,8 @@ class SqlEndpoint:
             strip_comments,
         )
 
-        if self.read_only and not is_query(sql):
+        query = is_query(sql)
+        if self.read_only and not query:
             raise SqlError("endpoint is read-only: only queries accepted")
         is_txn_verb = bool(_TXN_VERB.match(strip_comments(sql)))
         if is_txn_verb and session is None:
@@ -433,7 +538,16 @@ class SqlEndpoint:
                 exclusive = True
                 continue
             break
+        key = None
         try:
+            if query and exclusive:
+                # a transaction's reads see its staged rows
+                self._results.skip("transaction")
+            elif query:
+                key, tables = self._result_key(sql, limit)
+                hit = self._results.get(key)
+                if hit is not None:
+                    return hit
             # NOTE: no unscoped register_views here — the router
             # registers each statement's identifier closure itself
             # (sql.py _query/_create/_merge), so a per-statement
@@ -480,16 +594,106 @@ class SqlEndpoint:
                 "stats": {k: _plain(v) for k, v in result.items()},
             }
         df = result
-        rows = df.limit(limit + 1).collect()
+        rows = collect(df.limit(limit + 1))
         truncated = len(rows) > limit
         rows = rows[:limit]
-        return {
+        out = {
             "columns": df.columns,
             "types": [f.dataType.simpleString() for f in df.schema.fields],
             "rows": [[_plain(v) for v in r] for r in rows],
             "n": len(rows),
             "truncated": truncated,
         }
+        if key is not None:
+            self._store(key, tables, df, out)
+        return out
+
+    def _result_key(self, sql: str, limit: int) -> tuple[tuple, frozenset]:
+        """(cache key, catalog tables) of query ``sql``: the statement
+        text, the row limit, the session time zone and ANSI flag (they
+        change results of the same plan), and the stamp of every
+        catalog table and view the router would register for it
+        (:meth:`~.catalog.Catalog.read_stamp`). No manifest is parsed
+        and no view registered."""
+        from data_lakehouse_spark.sql import LakehouseSql
+
+        conf = self.catalog.spark.conf
+        stamp, tables = self.catalog.read_stamp(LakehouseSql._idents(sql))
+        key = (
+            sql,
+            limit,
+            conf.get("spark.sql.session.timeZone"),
+            conf.get("spark.sql.ansi.enabled"),
+            stamp,
+        )
+        return key, tables
+
+    def _store(self, key: tuple, tables: frozenset, df, out: dict) -> None:
+        """Store ``out``, the result of ``df`` under ``key``, when it
+        is the same for every run under that key: the plan is
+        deterministic, calls no current-time or current-user function,
+        and reads only catalog table dirs of the stamped ``tables``
+        (no path read, foreign temp view or in-memory relation). The
+        key is taken again under the gate's read side; a commit since
+        the lookup changed it, and then nothing is stored."""
+        reason = self._uncacheable(key[0], tables, df)
+        if reason is None:
+            self._gate.acquire_read()
+            try:
+                if self._result_key(key[0], key[1])[0] == key:
+                    self._results.put(key, out)
+                else:
+                    reason = "snapshot_moved"
+            finally:
+                self._gate.release_read()
+        if reason is not None:
+            self._results.skip(reason)
+
+    def _uncacheable(self, sql: str, tables: frozenset, df) -> str | None:
+        """Why the result of query ``sql`` (planned as ``df``) may differ
+        between two runs over the same snapshots of catalog ``tables``,
+        or ``None``. Checked on the statement and the catalog views it
+        pulls in, then on the analyzed plan and every subquery plan in
+        it."""
+        from data_lakehouse_spark.sql import LakehouseSql, mask_strings
+
+        views = self.catalog.views()
+        texts = [sql] + [
+            views[v]
+            for v in self.catalog._view_closure(LakehouseSql._idents(sql), views)
+            if v in views
+        ]
+        if any(_PATH_READ.search(mask_strings(t)) for t in texts):
+            return "path_read"
+        plan = df._jdf.queryExecution().analyzed()
+        if not plan.deterministic():
+            return "nondeterministic"
+        text = plan.treeString(False, False, 2**31 - 1, False, False)
+        if _TRUNCATED.search(text):
+            return "plan_text_truncated"
+        if _TIME_OR_USER.search(text):
+            return "time_or_user_function"
+        root = os.path.abspath(self.catalog.root)
+        dirs = tuple(os.path.join(root, t) + os.sep for t in tables)
+        subs = plan.subqueriesAll()
+        for p in [plan, *(subs.apply(i) for i in range(subs.length()))]:
+            leaves = p.collectLeaves()
+            for i in range(leaves.length()):
+                leaf = leaves.apply(i)
+                kind = leaf.getClass().getSimpleName()
+                if kind == "CTERelationRef":
+                    continue  # its definition's leaves are in this plan too
+                if kind != "LogicalRelation":
+                    return "non_catalog_leaf"
+                try:
+                    paths = leaf.relation().location().rootPaths()
+                except Exception:  # a relation that is not a file scan
+                    return "non_catalog_leaf"
+                for j in range(paths.length()):
+                    local = os.path.normpath(paths.apply(j).toUri().getPath())
+                    if not (local + os.sep).startswith(dirs):
+                        return "non_catalog_leaf"
+        return None
 
     def _evict_lru_locked(self) -> None:
         """At the session cap, evict the least-recently-used session

@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["collect", "get_spark", "stop_spark"]
 
 # Defaults chosen for local[  N] testing; on a 1000-executor cluster the
 # shuffle partition count should be ~2-3x total cores (or left to AQE's
@@ -98,6 +98,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def collect(df) -> list:
+    """``df.collect()`` that closes its local result socket. PySpark's
+    own ``collect`` closes only the file wrapper and leaves the socket
+    to the garbage collector: a ``ResourceWarning`` per call, and an
+    open descriptor until the next collection in a long-lived server.
+    The SQL endpoint and the DML it routes collect through here."""
+    from pyspark.serializers import BatchedSerializer, CPickleSerializer
+    from pyspark.traceback_utils import SCCallSiteSync
+    from pyspark.util import local_connect_and_auth
+
+    with SCCallSiteSync(df.sparkSession.sparkContext):
+        sock_info = df._jdf.collectToPython()
+    sockfile, sock = local_connect_and_auth(sock_info[0], sock_info[1])
+    with sock, sockfile:
+        sock.settimeout(None)
+        return list(BatchedSerializer(CPickleSerializer()).load_stream(sockfile))
 
 
 def stop_spark() -> None:

@@ -59,6 +59,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_lakehouse_spark.session import collect
+
 
 class SqlError(ValueError):
     """Raised for statements the dialect router cannot express, with a
@@ -405,7 +407,7 @@ class LakehouseSql:
         if hints and out.columns == ["plan"]:
             # append the manifest-skipping suggestions UNDER the Spark
             # plan text (same single-row shape EXPLAIN consumers parse)
-            row = out.collect()
+            row = collect(out)
             if len(row) == 1:
                 text = row[0]["plan"].rstrip() + "\n\n" + "\n".join(hints)
                 return self.spark.createDataFrame(
@@ -1390,7 +1392,7 @@ class LakehouseSql:
                                "timestamp")
             # resolve the as-of snapshot, then roll back to its version
             df_version = None
-            entries = self.catalog.snapshots(name).collect()
+            entries = collect(self.catalog.snapshots(name))
             ts = arg[1:-1]
             for e in sorted(entries, key=lambda r: r["version"]):
                 if (

@@ -887,6 +887,24 @@ def test_wap_staged_commit_audit_publish(spark, tmp_path):
         cat.publish("w")
 
 
+def test_row_count_counts_the_published_snapshot(spark, tmp_path):
+    """``row_count`` counts what a default read returns: a staged
+    append is not counted until it is published; ``version=`` still
+    counts the staged snapshot."""
+    cat = _catalog(spark, tmp_path)
+    cat.create_table("w", spark.createDataFrame(
+        [(1, 10.0), (2, 20.0)], ["id", "val"]
+    ))                                          # v0
+    cat.append("w", spark.createDataFrame(
+        [(3, 30.0)], ["id", "val"]
+    ), staged=True)                             # v1 (staged)
+    assert cat.read("w").count() == 2
+    assert cat.row_count("w") == 2
+    assert cat.row_count("w", version=1) == 3
+    cat.publish("w")
+    assert cat.row_count("w") == cat.read("w").count() == 3
+
+
 def test_timestamp_as_of_read(spark, tmp_path):
     """TIMESTAMP AS OF resolves to the last published snapshot at or
     before the instant (manifest timestamps rewritten to distinct

@@ -11,6 +11,14 @@ import pytest
 from data_lakehouse_spark import client as dbapi
 from data_lakehouse_spark.catalog import Catalog
 from data_lakehouse_spark.server import SqlEndpoint
+from data_lakehouse_spark.session import collect
+
+#: a socket the client or the endpoint leaves to the garbage collector
+#: fails the test that leaked it
+pytestmark = [
+    pytest.mark.filterwarnings("error::ResourceWarning"),
+    pytest.mark.filterwarnings("error::pytest.PytestUnraisableExceptionWarning"),
+]
 
 
 @pytest.fixture()
@@ -183,7 +191,7 @@ _TEXT = st.text(
 def test_string_literal_roundtrips_through_spark(spark, s):
     """Any NUL-free string binds to a literal Spark parses back to the
     exact original value."""
-    out = spark.sql(f"SELECT {_literal(s)} AS v").collect()[0][0]
+    out = collect(spark.sql(f"SELECT {_literal(s)} AS v"))[0][0]
     assert out == s
 
 
@@ -256,9 +264,7 @@ def test_dsir_string_doc_ids(spark):
 
     rows = [(f"doc-{i}", "alpha beta gamma " * 3, "s") for i in range(20)]
     docs = spark.createDataFrame(rows, "doc_id string, text string, src string")
-    out = _corpus.dsir_importance_sample(
-        docs, docs.limit(5), 6, seed=0
-    ).collect()
+    out = collect(_corpus.dsir_importance_sample(docs, docs.limit(5), 6, seed=0))
     assert len(out) == 6
     assert len({r["doc_id"] for r in out}) == 6
     assert all(r["doc_id"].startswith("doc-") for r in out)

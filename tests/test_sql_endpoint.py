@@ -5,12 +5,22 @@ surfacing — the Thrift-server-serving-dbt analog
 
 from __future__ import annotations
 
+import gc
 import json
 import threading
 import urllib.request
 
+import pytest
+
 from data_lakehouse_spark.catalog import Catalog
 from data_lakehouse_spark.server import SqlEndpoint
+
+#: a socket the endpoint leaves to the garbage collector fails the test
+#: that leaked it, on the cache-hit and the miss path alike
+pytestmark = [
+    pytest.mark.filterwarnings("error::ResourceWarning"),
+    pytest.mark.filterwarnings("error::pytest.PytestUnraisableExceptionWarning"),
+]
 
 
 def _post(port: int, sql: str, limit: int = 1000) -> dict:
@@ -512,3 +522,25 @@ def test_endpoint_request_validation_and_nonfinite_floats(spark, tmp_path):
         assert out["rows"] == [[None, None, None]]
     finally:
         ep.stop()
+
+
+def test_endpoint_queries_leave_no_socket_behind(spark, tmp_path):
+    """A miss, a hit and an uncacheable query over HTTP and in-process:
+    every result socket is closed when its rows are read, so a full
+    collection finds none left (a leak would raise here)."""
+    cat = Catalog(spark, str(tmp_path / "w"))
+    cat.create_table("t", spark.createDataFrame([(1,), (2,)], "id long"))
+    ep = SqlEndpoint(cat).start()
+    try:
+        for _ in range(2):  # a miss, then a hit
+            assert _post(ep.port, "SELECT id FROM t ORDER BY id")["rows"] == [
+                [1], [2]
+            ]
+            assert ep.execute("SELECT COUNT(*) AS n FROM t")["rows"] == [[2]]
+        assert len(_post(ep.port, "SELECT rand() AS r FROM t")["rows"]) == 2
+        gc.collect()
+    finally:
+        ep.stop()
+    gc.collect()
+    m = ep._results.metrics()
+    assert (m["hits"], m["misses"]) == (2, 3)
