@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import contextlib
 import functools
-import itertools
 import json
 import operator
 import os
@@ -53,7 +52,23 @@ from pyspark.sql.types import StructType
 
 from data_lakehouse_spark.session import collect
 
-__all__ = ["Catalog", "TableHandle", "apply_partition_transforms"]
+__all__ = [
+    "TEMP_VIEW_LOCK",
+    "Catalog",
+    "TableHandle",
+    "apply_partition_transforms",
+]
+
+#: held while catalog names are registered as temp views and while a
+#: statement over them is analyzed. Temp views are global to the Spark
+#: session, and analysis binds each name to the plan registered under
+#: it at that moment: without the lock a concurrent statement could
+#: re-register a name (at an older snapshot, or a transaction's staged
+#: one) between this statement's registration and its analysis, and
+#: this statement would read that snapshot instead of the one it
+#: resolved. Re-entrant: ``register_views`` takes it inside callers
+#: that hold it across registration and ``spark.sql``.
+TEMP_VIEW_LOCK = threading.RLock()
 
 #: ``partition_by`` entries may be Iceberg-style TRANSFORMS instead of
 #: plain column names: ``days(ts)`` / ``hours(ts)`` / ``months(ts)``
@@ -89,19 +104,6 @@ def _fsync_dir(path: str) -> None:
         os.close(fd)
 
 
-#: in-process write generations of the JSON files ``_write_json``
-#: replaces, in hashed slots (bounded; a shared slot only makes a
-#: stamp change when it need not). Two equal-size rewrites of one file
-#: within one filesystem timestamp tick can reuse the inode and repeat
-#: ``(st_ino, st_mtime_ns, st_size)``; the generation still differs.
-_WRITE_GEN = [0] * 4096
-_WRITE_SEQ = itertools.count(1)
-
-
-def _gen_slot(path: str) -> int:
-    return hash(os.path.abspath(path)) % len(_WRITE_GEN)
-
-
 def _write_json(path: str, obj) -> None:
     """Atomically replace ``path`` with ``obj`` as JSON, durable across
     power loss: write a tmp file, fsync it, rename it over ``path``,
@@ -114,22 +116,19 @@ def _write_json(path: str, obj) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
-    # bump after the replace: a stamp read in between pairs the new
-    # file with the old generation, a key no later lookup makes (bumped
-    # first, it could pair the old file's content with the new one)
-    _WRITE_GEN[_gen_slot(path)] = next(_WRITE_SEQ)
     _fsync_dir(os.path.dirname(path))
 
 
-def _json_stamp(path: str) -> tuple | None:
-    """What changes whenever ``path`` is replaced: its inode, mtime and
-    size (another process's writes) and its write generation (this
-    process's). ``None`` while the file does not exist."""
+def _file_stamp(path: str) -> tuple | None:
+    """``(st_ino, st_mtime_ns, st_size)`` of ``path``: it changes
+    whenever ``_write_json`` replaces the file with one of another
+    length or outside the old file's timestamp tick. ``None`` while the
+    file does not exist."""
     try:
         st = os.stat(path)
     except FileNotFoundError:
         return None
-    return (st.st_ino, st.st_mtime_ns, st.st_size, _WRITE_GEN[_gen_slot(path)])
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
 
 
 def _read_json(path: str, default):
@@ -3755,8 +3754,9 @@ class Catalog:
         views = self.views()
         if name not in views:
             raise ValueError(f"view {name} does not exist")
-        self.register_views(names={name})
-        return self.spark.sql(views[name])
+        with TEMP_VIEW_LOCK:
+            self.register_views(names={name})
+            return self.spark.sql(views[name])
 
     @staticmethod
     def _view_closure(names: set[str], views: dict[str, str]) -> set[str]:
@@ -3776,20 +3776,42 @@ class Catalog:
         ``names`` reads through :meth:`register_views`: ``tables`` are
         the catalog tables of the view closure, and ``stamp`` changes
         whenever a commit, tag change or view change — by this process
-        or another — could change what the statement reads (see
-        :func:`_json_stamp`). The views file is stamped before it is
-        read, so a view change racing this call makes the stamp stale,
-        never current for the old closure. It stats files and reads
-        the views file; no manifest is parsed."""
-        views_stamp = _json_stamp(self._views_path())
-        parts, tables = [], set()
-        for name in sorted(self._view_closure(names, self.views())):
+        or another — could change what the statement reads.
+
+        A manifest is stamped by :func:`_file_stamp` alone: every
+        commit appends an entry or a flag, so a manifest never returns
+        to an earlier length (a dropped and re-created table's first
+        manifest is written after its data, ticks later). The tag file and the view definitions can
+        (dropping and re-creating a tag rewrites ``_tags.json`` at the
+        same length, maybe on the reused inode within one timestamp
+        tick), so their content is part of the stamp as well: the tag
+        file's bytes and the text of every view in the closure. Each
+        file is stamped before it is read, so a write racing this call
+        pairs an old stamp with new content, a key no later lookup
+        makes. No manifest is parsed."""
+        views_stamp = _file_stamp(self._views_path())
+        views = self.views()
+        closure = self._view_closure(names, views)
+        parts: list[tuple] = [
+            views_stamp,
+            tuple((v, text) for v, text in views.items() if v in closure),
+        ]
+        tables = set()
+        for name in sorted(closure):
             path = os.path.join(self.root, name)
-            m = _json_stamp(os.path.join(path, "_manifest.json"))
-            if m is not None:
-                tables.add(name)
-                parts.append((name, m, _json_stamp(os.path.join(path, "_tags.json"))))
-        return (views_stamp, *parts), frozenset(tables)
+            m = _file_stamp(os.path.join(path, "_manifest.json"))
+            if m is None:
+                continue
+            tables.add(name)
+            tags_path = os.path.join(path, "_tags.json")
+            tags_stamp = _file_stamp(tags_path)
+            try:
+                with open(tags_path, "rb") as f:
+                    tags = f.read()
+            except FileNotFoundError:
+                tags = None
+            parts.append((name, m, tags_stamp, tags))
+        return tuple(parts), frozenset(tables)
 
     def register_views(self, names: set[str] | None = None) -> None:
         """Expose tables AND defined SQL views for spark.sql() (views
@@ -3801,20 +3823,24 @@ class Catalog:
         statement's identifier set so serving one query costs O(its
         tables), not O(catalog size) manifest reads (a 1000-table
         catalog must not pay 1000 snapshot resolutions per statement).
-        ``None`` registers everything (the legacy full-surface call)."""
-        views = self.views()
-        if names is None:
-            needed_tables = set(self.tables())
-            needed_views = set(views)
-        else:
-            needed = self._view_closure(names, views)
-            needed_tables = needed & set(self.tables())
-            needed_views = needed & set(views)
-        for name in sorted(needed_tables):
-            self.read(name).createOrReplaceTempView(name)
-        for name, sql_text in views.items():
-            if name in needed_views:
-                self.spark.sql(sql_text).createOrReplaceTempView(name)
+        ``None`` registers everything (the legacy full-surface call).
+        A caller that then analyzes a statement over these names holds
+        :data:`TEMP_VIEW_LOCK` across both, so the plan binds the views
+        registered here."""
+        with TEMP_VIEW_LOCK:
+            views = self.views()
+            if names is None:
+                needed_tables = set(self.tables())
+                needed_views = set(views)
+            else:
+                needed = self._view_closure(names, views)
+                needed_tables = needed & set(self.tables())
+                needed_views = needed & set(views)
+            for name in sorted(needed_tables):
+                self.read(name).createOrReplaceTempView(name)
+            for name, sql_text in views.items():
+                if name in needed_views:
+                    self.spark.sql(sql_text).createOrReplaceTempView(name)
 
     # -- materialized views ------------------------------------------------
     # Incrementally-maintained aggregate tables: the definition persists

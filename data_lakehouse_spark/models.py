@@ -42,6 +42,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from data_lakehouse_spark.catalog import TEMP_VIEW_LOCK
+
 
 class ModelError(ValueError):
     """A model failed to parse, render, or materialize."""
@@ -373,11 +375,16 @@ class ModelRunner:
         return {k: t["result"] for k, t in report["tasks"].items()}
 
     def _query(self, sql: str) -> DataFrame:
-        self.catalog.register_views()
-        # atomic runs: downstream models read upstream STAGED snapshots
-        for name, v in getattr(self, "_staged_reads", {}).items():
-            self.catalog.read(name, version=v).createOrReplaceTempView(name)
-        return self.catalog.spark.sql(sql)
+        # the plan binds the views registered here (TEMP_VIEW_LOCK)
+        with TEMP_VIEW_LOCK:
+            self.catalog.register_views()
+            # atomic runs: downstream models read upstream STAGED
+            # snapshots
+            for name, v in getattr(self, "_staged_reads", {}).items():
+                self.catalog.read(name, version=v).createOrReplaceTempView(
+                    name
+                )
+            return self.catalog.spark.sql(sql)
 
     def _run_one(self, name: str, *, full_refresh: bool) -> dict:
         m = self.models[name]

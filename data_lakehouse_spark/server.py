@@ -105,10 +105,6 @@ _PATH_READ = _re.compile(
     _re.I,
 )
 
-#: what Spark writes where it shortens a plan or expression rendering
-#: (``... 5 more fields``): the rendering no longer shows every function
-_TRUNCATED = _re.compile(r"\.\.\. \d+ more (fields|characters)")
-
 
 class _RwLock:
     """Reader–writer lock: shared statements (no transaction in play)
@@ -633,9 +629,16 @@ class SqlEndpoint:
         is the same for every run under that key: the plan is
         deterministic, calls no current-time or current-user function,
         and reads only catalog table dirs of the stamped ``tables``
-        (no path read, foreign temp view or in-memory relation). The
-        key is taken again under the gate's read side; a commit since
-        the lookup changed it, and then nothing is stored."""
+        (no path read, foreign temp view or in-memory relation).
+
+        The plan read the snapshots the key names: the key was taken
+        before the router resolved and registered this statement's
+        views, and the router analyzed the statement under the same
+        :data:`~.catalog.TEMP_VIEW_LOCK` as that registration, so the
+        plan is bound to snapshots no older than the key's. The key is
+        taken again here, under the gate's read side; if a commit,
+        tag or view change came in between, it differs and nothing is
+        stored."""
         reason = self._uncacheable(key[0], tables, df)
         if reason is None:
             self._gate.acquire_read()
@@ -669,8 +672,6 @@ class SqlEndpoint:
         if not plan.deterministic():
             return "nondeterministic"
         text = plan.treeString(False, False, 2**31 - 1, False, False)
-        if _TRUNCATED.search(text):
-            return "plan_text_truncated"
         if _TIME_OR_USER.search(text):
             return "time_or_user_function"
         root = os.path.abspath(self.catalog.root)

@@ -105,7 +105,11 @@ def collect(df) -> list:
     own ``collect`` closes only the file wrapper and leaves the socket
     to the garbage collector: a ``ResourceWarning`` per call, and an
     open descriptor until the next collection in a long-lived server.
-    The SQL endpoint and the DML it routes collect through here."""
+    The SQL endpoint and the DML it routes collect through here.
+
+    It makes the calls PySpark 4.1's ``DataFrame.collect`` makes, plus
+    the close; ``tests/test_sql_endpoint.py`` pins that version and
+    checks the rows equal ``df.collect()``'s."""
     from pyspark.serializers import BatchedSerializer, CPickleSerializer
     from pyspark.traceback_utils import SCCallSiteSync
     from pyspark.util import local_connect_and_auth

@@ -59,6 +59,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_lakehouse_spark.catalog import TEMP_VIEW_LOCK
 from data_lakehouse_spark.session import collect
 
 
@@ -313,20 +314,25 @@ class LakehouseSql:
     _META_TABLES = ("snapshots", "files", "partitions")
 
     def _query(self, stmt: str) -> DataFrame:
-        # scoped registration: only the statement's identifiers (plus
-        # view-dependency closure) resolve snapshots — O(referenced
-        # tables), not O(catalog size), per statement
-        self.catalog.register_views(names=self._idents(stmt))
-        if self._txn is not None:
-            # read-your-own-writes: tables this transaction has staged
-            # resolve to their staged snapshots for THIS session
-            for name, (v, _) in self._txn._staged.items():
-                self.catalog.read(name, version=v).createOrReplaceTempView(
-                    name
-                )
-        stmt = self._rewrite_meta_tables(stmt)
-        stmt = self._rewrite_table_changes(stmt)
-        return self.spark.sql(self._rewrite_time_travel(stmt))
+        # registration and analysis under one lock: the plan binds the
+        # temp views THIS statement registered, never a concurrent
+        # statement's re-registration of the same name
+        with TEMP_VIEW_LOCK:
+            # scoped registration: only the statement's identifiers
+            # (plus view-dependency closure) resolve snapshots —
+            # O(referenced tables), not O(catalog size), per statement
+            self.catalog.register_views(names=self._idents(stmt))
+            if self._txn is not None:
+                # read-your-own-writes: tables this transaction has
+                # staged resolve to their staged snapshots for THIS
+                # session
+                for name, (v, _) in self._txn._staged.items():
+                    self.catalog.read(
+                        name, version=v
+                    ).createOrReplaceTempView(name)
+            stmt = self._rewrite_meta_tables(stmt)
+            stmt = self._rewrite_table_changes(stmt)
+            return self.spark.sql(self._rewrite_time_travel(stmt))
 
     def _rewrite_table_changes(self, stmt: str) -> str:
         """Delta's CDF table function: ``table_changes('t', from[, to])``
@@ -725,8 +731,9 @@ class LakehouseSql:
             name = m.group(2)
             body = stmt[m.start(3) : m.end(3)].strip()
             # validate the definition parses/resolves before persisting
-            self.catalog.register_views(names=self._idents(body))
-            self.spark.sql(self._rewrite_time_travel(body))
+            with TEMP_VIEW_LOCK:
+                self.catalog.register_views(names=self._idents(body))
+                self.spark.sql(self._rewrite_time_travel(body))
             self.catalog.create_view(name, body, replace=bool(m.group(1)))
             return {"op": "create_view", "name": name}
         raise SqlError(
@@ -1228,8 +1235,9 @@ class LakehouseSql:
         if using.startswith("("):
             source = self._query(using[1:-1])
         else:
-            self.catalog.register_views(names={using})
-            source = self.spark.table(using)
+            with TEMP_VIEW_LOCK:
+                self.catalog.register_views(names={using})
+                source = self.spark.table(using)
 
         # ON: conjunction of alias-qualified equality predicates on the
         # SAME column name — the catalog merge key contract.

@@ -10,6 +10,7 @@ from __future__ import annotations
 import itertools
 import json
 import os
+import subprocess
 import sys
 import threading
 import urllib.request
@@ -173,28 +174,96 @@ def test_moved_tag_and_version_reads(spark, tmp_path, endpoint):
     assert _same(ep, cat, ver_q)["rows"] == [[1], [2]]
 
 
-def test_equal_size_rewrites_within_one_tick(spark, tmp_path, endpoint, monkeypatch):
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _in_another_process(root: str, code: str) -> None:
+    """Run ``code`` with ``cat``, a :class:`Catalog` on ``root``, in a
+    fresh Python process (no Spark session: tag and view writes need
+    none)."""
+    subprocess.run(
+        [sys.executable, "-c",
+         "import sys\n"
+         "from data_lakehouse_spark.catalog import Catalog\n"
+         "cat = Catalog(None, sys.argv[1])\n" + code, root],
+        cwd=_REPO, check=True, timeout=120,
+    )
+
+
+@pytest.mark.parametrize("change", ["tag", "view"])
+def test_equal_size_rewrites_within_one_tick(
+    spark, tmp_path, endpoint, monkeypatch, change
+):
     """The filesystem may report one (inode, mtime, size) for two
-    rewrites of the tag file — same tick, reused inode, same length:
-    the in-process write generation still moves the stamp."""
+    rewrites of a small metadata file — same tick, reused inode, same
+    length — and another process made them, so nothing in this one
+    saw the write: the file's content still moves the stamp."""
     cat = _catalog(spark, tmp_path)
     cat.append("t", spark.createDataFrame([(3, "c")], SCHEMA))   # v1
-    cat.create_tag("t", "audit", 0)
+    if change == "tag":
+        cat.create_tag("t", "audit", 0)
+        path = os.path.join(cat.root, "t", "_tags.json")
+        q = "SELECT id FROM t VERSION AS OF 'audit' ORDER BY id"
+        code = "cat.drop_tag('t', 'audit')\ncat.create_tag('t', 'audit', 1)"
+        want = [[1], [2], [3]]
+    else:
+        cat.create_view("vt", "SELECT MIN(id) AS n FROM t")
+        path = os.path.join(cat.root, "_views.json")
+        q = "SELECT n FROM vt"
+        code = "cat.create_view('vt', 'SELECT MAX(id) AS n FROM t', replace=True)"
+        want = [[3]]
     ep = endpoint(cat)
-    q = "SELECT id FROM t VERSION AS OF 'audit' ORDER BY id"
-    assert _same(ep, cat, q)["rows"] == [[1], [2]]
-    tags = os.path.join(cat.root, "t", "_tags.json")
-    real_stat, frozen = os.stat, os.stat(tags)
+    first = _same(ep, cat, q)["rows"]
+    real_stat, frozen = os.stat, os.stat(path)
 
-    def stat(path, *args, **kwargs):
-        st = real_stat(path, *args, **kwargs)
-        return frozen if os.fspath(path) == tags else st
+    def stat(p, *args, **kwargs):
+        st = real_stat(p, *args, **kwargs)
+        return frozen if os.fspath(p) == path else st
 
     monkeypatch.setattr(os, "stat", stat)
-    cat.drop_tag("t", "audit")
-    cat.create_tag("t", "audit", 1)
-    assert os.path.getsize(tags) == frozen.st_size
-    assert _same(ep, cat, q)["rows"] == [[1], [2], [3]]
+    _in_another_process(cat.root, code)
+    assert real_stat(path).st_size == frozen.st_size
+    assert _same(ep, cat, q)["rows"] == want != first
+    assert _stats(ep)["hits"] == 0
+
+
+def test_stale_registration_waits_for_the_analysis(
+    spark, tmp_path, endpoint, monkeypatch
+):
+    """Temp views are global to the Spark session. A concurrent
+    statement that resolved ``t`` before a commit and registers it
+    late must not land between this statement's registration and its
+    analysis: this statement would then read the old snapshot, and its
+    result would be stored under the new snapshot's key."""
+    cat = _catalog(spark, tmp_path)
+    stale = cat.read("t")                                        # v0
+    cat.append("t", spark.createDataFrame([(3, "c")], SCHEMA))   # v1
+    want = [[1, "a"], [2, "b"], [3, "c"]]
+    ep = endpoint(cat)
+    real_read, real_register = cat.read, cat.register_views
+    late = threading.Thread(target=real_register, kwargs={"names": {"t"}})
+
+    def read(name, *args, **kwargs):
+        # the late statement resolved ``t`` before the append
+        if threading.current_thread() is late:
+            return stale
+        return real_read(name, *args, **kwargs)
+
+    def register_views(*args, **kwargs):
+        real_register(*args, **kwargs)
+        if late.ident is None:
+            late.start()
+            late.join(1.0)  # time enough to land, were it not held off
+
+    monkeypatch.setattr(cat, "read", read)
+    monkeypatch.setattr(cat, "register_views", register_views)
+    out = ep.execute(Q)
+    late.join(60)
+    assert not late.is_alive()
+    assert out["rows"] == want
+    # the late registration has landed now; the stored result is v1's
+    assert _same(ep, cat, Q)["rows"] == want
+    assert _stats(ep)["hits"] == 1
 
 
 @pytest.mark.parametrize(

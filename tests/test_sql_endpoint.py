@@ -544,3 +544,32 @@ def test_endpoint_queries_leave_no_socket_behind(spark, tmp_path):
     gc.collect()
     m = ep._results.metrics()
     assert (m["hits"], m["misses"]) == (2, 3)
+
+
+def test_session_collect_matches_pyspark_collect(spark):
+    """``session.collect`` repeats PySpark 4.1's ``DataFrame.collect``
+    calls and adds only the socket close: the rows are equal for every
+    column type the endpoint serves, and an upgrade past the version it
+    was written against fails here until it is checked again."""
+    import warnings
+
+    import pyspark
+
+    from data_lakehouse_spark.session import collect
+
+    assert pyspark.__version__.startswith("4.1."), pyspark.__version__
+    df = spark.sql(
+        "SELECT id, CAST(id AS STRING) AS s, id * 1.5 AS d, "
+        "CAST(id AS DECIMAL(18, 2)) AS m, CAST(NULL AS INT) AS n, "
+        "DATE'2024-01-01' + CAST(id % 30 AS INT) AS dt, "
+        "TIMESTAMP'2024-01-01 00:00:00' AS ts, array(id, id) AS a, "
+        "named_struct('x', id) AS st, map('k', id) AS mp "
+        "FROM range(2500)"
+    )
+    with warnings.catch_warnings():
+        # PySpark's own collect leaves its socket to the collector
+        warnings.simplefilter("ignore", ResourceWarning)
+        want, empty = df.collect(), df.limit(0).collect()
+        gc.collect()
+    assert collect(df) == want
+    assert collect(df.limit(0)) == empty == []
